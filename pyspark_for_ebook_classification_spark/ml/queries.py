@@ -122,6 +122,23 @@ def ml_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NB_CUT = 8000  # md5 bucket < 8000 -> train (the split_train_test 0.8 band)
 _NB_SEED = 42
 
+
+def _with_n_train(n_docs: DataFrame) -> DataFrame:
+    """Append ``n_train`` = sum(n_docs) to the per-label doc counts
+    (lang, n_docs). A window over an empty partition spec would move
+    every row to one partition and log a WindowExec warning per call;
+    a crossJoin with a separate one-row sum re-reads the training data,
+    because the scoring join's inferred ``lang IS NOT NULL`` reaches only
+    the per-label branch, so the two no longer share an exchange. One
+    global aggregate that carries the label rows and their sum, then
+    unnests them, reads the training data once. NULL-label docs count
+    toward n_train, as in the oracle's COUNT(*) over the train split."""
+    return n_docs.agg(
+        F.collect_list(F.struct("lang", "n_docs")).alias("labels"),
+        F.sum("n_docs").alias("n_train"),
+    ).select(F.inline("labels"), "n_train")
+
+
 #: the NB train+score CTE chain up to the per-doc argmax; shared by
 #: ml_nb_relational_twin and the ml_eval_relational_twin built on it.
 def _nb_ctes(alpha: float = 1.0) -> str:
@@ -266,11 +283,7 @@ def ml_nb_relational_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot_l = cnt_lt.groupBy("lang").agg(F.sum("c").alias("tot"))
     vocab = cnt_lt.select("token").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    prior = (
-        train.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("n_train", F.sum("n_docs").over(Window.partitionBy()))
-    )
+    prior = _with_n_train(train.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
     te_tok = (
         test.select("doc_id", F.col("lang").alias("true_lang"), F.explode("tokens").alias("token"))
         .join(vocab, "token")
@@ -1279,11 +1292,7 @@ def nb_classify(
     tot_l = cnt_lt.groupBy("lang").agg(F.sum("c").alias("tot"))
     vocab = cnt_lt.select("token").distinct()
     vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    prior = (
-        tr.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("n_train", F.sum("n_docs").over(Window.partitionBy()))
-    )
+    prior = _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
     te_tok = (
         te.select("doc_id", F.explode("tokens").alias("token"))
         .join(vocab, "token")

@@ -142,8 +142,13 @@ def _fanout_partitions(df: DataFrame) -> int:
     sizes on the tiny PRE-explode bytes — it would coalesce the
     exchange to ~1 partition and re-serialize the whole amplified stage
     (the exact single-task failure mode this repartition exists to
-    prevent)."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    prevent). A non-integer setting (some platforms set ``auto``) falls
+    back to the context's default parallelism."""
+    spark = df.sparkSession
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
 
 
 def _lcg_seeds(num_hashes: int) -> tuple[list[int], list[int]]:

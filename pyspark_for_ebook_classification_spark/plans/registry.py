@@ -83,8 +83,8 @@ _LOADED = False
 #: keep registration order after the listed ones (they were verified in a
 #: prior round; local pytest parity still covers them every run).
 _PRIORITY: tuple[str, ...] = (
-    # ========== r15 front block (mechanical; scripts/rotate_priority.py
-    # output against union(CORRECTNESS_r01..r14) — 335/335 registered
+    # ========== front block (mechanical; scripts/rotate_priority.py
+    # output against union(CORRECTNESS_r01..r15) — 335/335 registered
     # names verified, 0 never-verified, 0 active pins: pure freshness
     # rotation — the standing HIGH_RISK families in cycle order, then
     # oldest-verdict-first round-robin (the stalest surviving verdicts
@@ -101,44 +101,44 @@ _PRIORITY: tuple[str, ...] = (
     "agg_histogram_width_bucket",
     "data_curriculum_order",
     "data_shuffle_deterministic",
-    "join_lateral_topn_per_nation",
-    "agg_group_by_all",
-    "agg_bool_count_if",
-    "window_yoy_revenue_growth",
-    "window_pct_of_total_share",
-    "window_share_within_region",
-    "window_cumulative_distinct_users",
-    "join_interval_overlap_windows",
-    "window_minmax_normalize",
-    "sql_recursive_month_spine",
-    "sql_pivot_clause",
-    "dedup_boilerplate_segments",
-    "dedup_incremental_neardup",
-    "sim_hard_negative_mining",
-    "dedup_semantic_embedding",
-    "sim_ann_grid_multiprobe",
-    "sim_grid_recall_report",
-    "text_pii_scrub",
-    "text_repetition_ratio",
-    "text_normalize_clean",
-    "text_gopher_quality_rules",
-    "multimodal_cdc_chunk_dedup",
-    "scan_schema_evolution_merge",
-    "agg_hll_mergeable_sketch",  # rows-only
-    "agg_approx_percentile",  # rows-only
-    "agg_basket_affinity",
-    "agg_gini_revenue",
-    "window_rolling_corr",
-    "window_peak_concurrency",
-    "window_event_transitions",
-    "window_cusum_alarm",
-    "window_funnel_time_to_convert",
-    "sql_order_priority_q4",
-    "sql_returned_items_q10",
-    "dedup_substring_spans",
-    "dedup_substring_removal",
-    "dedup_banding_sweep",
-    "sim_mmr_diversified_topk",
+    "sim_ivfpq_adc_topk",
+    "sim_prefix_rerank_topk",
+    "sim_embedding_hygiene_gate",
+    "sim_centroid_shift_drift",
+    "text_source_overlap_grams",
+    "text_chunk_sliding",
+    "text_tokenizer_fertility",
+    "text_term_burstiness",
+    "text_nucleus_vocab",
+    "data_skew_audit",
+    "data_importance_resample",
+    "data_privacy_kl_audit",
+    "data_dp_noisy_counts",
+    "data_epoch_allocation",
+    "data_shard_token_balanced",
+    "data_packing_efficiency_report",
+    "data_zorder_layout",
+    "data_psi_drift",
+    "data_temperature_mixing",
+    "multimodal_phash_neardup",
+    "multimodal_token_budget",
+    "sketch_bloom_fpr_calibration",
+    "graph_kcore_hindex",
+    "graph_jaccard_link_prediction",
+    "text_novelty_curve",
+    "ml_nb_text_predictions",  # rows-only
+    "ml_lr_confusion_matrix",  # rows-only
+    "ml_cv_grid_best",  # rows-only
+    "ml_eval_metrics",  # rows-only
+    "ml_nb_relational_twin",
+    "scan_parquet_checksum",
+    "scan_inline_values",
+    "project_compute",
+    "filter_complex",
+    "filter_date_range",
+    "filter_like_regexp",
+    "distinct_segments",
+    "dedup_by_key_keep_first",
 )
 
 # Rotation bookkeeping (authoritative — recomputed each round from

@@ -5,6 +5,23 @@ partition coalescing), Arrow on (any pandas boundary is batched), session
 timezone pinned to UTC (oracle parity — DuckDB timestamps are UTC-naive),
 shuffle partitions sized to cores for local mode (on a real cluster this is
 set to ~2-3× total cores / targeting ~128-256 MB shuffle blocks).
+
+Generated code is compiled once per JVM and then reused. Spark keeps the
+classes it generates (Janino-compiled, then JIT-compiled by HotSpot) in a
+JVM-wide LRU cache, 100 entries by default. The engine's working set is
+far larger: one pass of the eight olap_mix benchmark queries alone
+generates about 120 distinct classes, so at the default every repeated
+query missed and paid compilation again. ``CODEGEN_CACHE_ENTRIES`` sizes
+the cache to the whole registry.
+
+One kind of miss stays: a whole-stage class name carries its stage id,
+which AQE assigns in the order stages finish, so a plan whose stages
+finish in a new order (nb_classify, the graph queries) compiles one more
+copy of its classes, once per order. Leaving the id out
+(``spark.sql.codegen.useIdInClassName=false``) removed those misses but
+made the first run of new bulk work slower: the curation ingest took
+15-20% longer in each of four paired runs, and in a one-conf-at-a-time
+check only that conf did it.
 """
 
 from __future__ import annotations
@@ -14,6 +31,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+#: Cap of Spark's JVM-wide generated-class cache (static conf
+#: ``spark.sql.codegen.cache.maxEntries``, default 100). Sized to the
+#: largest working set measured, without eviction: a full oracle sweep
+#: (scripts/drive_entry.py, all 335 registry queries at sf0.01) compiles
+#: 4,226 distinct classes; a perfbench olap_mix run 130, an
+#: online_requests run 247. 10,000 holds the sweep with about 2x
+#: headroom. An entry holds its source and bytecode: after one pass of
+#: the registry (about 3,500 entries) the heap held 250 MB more after GC than
+#: at the default cap, metaspace 27 MB and the code cache 16 MB more.
+CODEGEN_CACHE_ENTRIES = 10_000
 
 
 def get_spark(
@@ -56,6 +84,9 @@ def get_spark(
         # set once at session build so sources/io.load never has to mutate
         # session conf mid-query (foreign sessions get a guarded fallback).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # static: takes effect only if this session is the first in the
+        # JVM to generate code
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

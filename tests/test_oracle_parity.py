@@ -120,6 +120,7 @@ _ROTATION_BASIS = (
     "CORRECTNESS_r12.json",
     "CORRECTNESS_r13.json",
     "CORRECTNESS_r14.json",
+    "CORRECTNESS_r15.json",
 )
 
 

@@ -909,3 +909,45 @@ def test_ann_library_routers_broadcast_query_side(spark, sf_dir):
         rep = audit(all_queries()[name].fn(spark, sf_dir))
         assert rep["broadcast_joins"] >= 1, (name, rep["plan"])
         assert rep["sortmerge_joins"] == 0, (name, rep["plan"])
+
+
+#: one registry query per relational family (the olap_mix set): together
+#: they generate about 120 classes, more than Spark's default 100-entry
+#: codegen cache holds
+_CODEGEN_REUSE_SET = (
+    "scan_parquet_checksum",
+    "join_inner_revenue_by_customer",
+    "agg_pricing_summary",
+    "window_sessionize_gap",
+    "topk_global_lineitems",
+    "sketch_kmv_distinct",
+    "graph_jaccard_link_prediction",
+    "stream_tumbling_hourly_twin",
+)
+
+
+def test_repeated_queries_reuse_generated_code(spark, sf_dir):
+    """A second pass over a working set larger than Spark's default
+    codegen cache compiles no new class. Guards the session's cache cap
+    against a revert or a working set that outgrows it. The stage id is
+    left out of class names for the test's duration: AQE numbers stages
+    in the order they finish, so with it a second pass may compile one
+    more copy of the graph query's classes, cap or no cap."""
+    qs = all_queries()
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass() -> int:
+        before = compiles.getCount()
+        for name in _CODEGEN_REUSE_SET:
+            qs[name].fn(spark, sf_dir).collect()
+        return compiles.getCount() - before
+
+    key = "spark.sql.codegen.useIdInClassName"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        one_pass()
+        second = one_pass()
+    finally:
+        spark.conf.set(key, saved)
+    assert second == 0

@@ -326,7 +326,7 @@ def test_bpe_apply_planted_fixed_merges(spark):
 
 
 def test_bpe_apply_long_table_crosses_lineage_cut(spark):
-    """r15 (r14 ADVICE): replaying a merge table longer than the 32-merge
+    """r15 (r14 ADVICE): replaying a merge table longer than the 16-merge
     lineage-cut interval must give the same answer as the sequential
     scanner — the periodic localCheckpoint bounds plan depth for
     production-scale tables and must be invisible to the result. The

@@ -146,6 +146,36 @@ def test_parameter_validation(spark, kwargs):
         neardup_dedup(docs, **kwargs)
 
 
+def test_fanout_partitions_falls_back_on_non_integer_conf(spark, monkeypatch):
+    """Some platforms set ``spark.sql.shuffle.partitions`` to ``auto``.
+    Open-source Spark's setter rejects that value, so the conf read is
+    faked inside a scoped block: the minhash plan must build on the
+    context's default parallelism instead of raising ValueError."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from pyspark_for_ebook_classification_spark.operators.dedup import _fanout_partitions
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *args, **kwargs):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps")],
+        "doc_id int, text string",
+    )
+    with monkeypatch.context() as m:
+        m.setattr(RuntimeConfig, "get", get)
+        assert _fanout_partitions(docs) == spark.sparkContext.defaultParallelism
+        out = neardup_dedup(docs)
+    assert {(r.doc_id, r.cluster_id, r.keep) for r in out.collect()} == {
+        (1, 1, True),
+        (2, 1, False),
+    }
+
+
 def test_s_curve_sanity():
     """Banding theory for the registered config (2 bands × 6 rows):
     collision probability is an S-curve — monotone in j, near-zero well
