@@ -9,6 +9,8 @@ of the feature engineering is fully oracle-checked in operators/textops.py
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from pyspark_for_ebook_classification_spark.ml.pipeline import (
     split_train_test,
 )
 from pyspark_for_ebook_classification_spark.plans.registry import query
+from pyspark_for_ebook_classification_spark.serving import built_for, require_columns
 from pyspark_for_ebook_classification_spark.sources.io import load
 
 
@@ -241,93 +244,14 @@ def ml_nb_relational_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-sum (libm-independence) and the per-(doc,lang) sum accumulates
     in DECIMAL — the text_bigram_lm_score discipline.
 
-    Scale shape: the model is two vocabulary-sized tables (per-lang
-    token counts, per-lang totals) plus two scalars — at 100 TB these
-    BROADCAST and scoring is one map-side join over the test token
-    stream followed by a (doc,lang)-keyed partial agg; training is one
-    token-keyed combine. No corpus self-join anywhere."""
-    d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("#", F.col("doc_id").cast("string"), F.lit(str(_NB_SEED)))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
-    docs = d.select(
-        "doc_id",
-        "lang",
-        F.filter(F.split("text", " "), lambda t: t != "").alias("tokens"),
-        bucket.alias("bucket"),
-    )
-    train = docs.filter(F.col("bucket") < _NB_CUT)
-    test = docs.filter(F.col("bucket") >= _NB_CUT)
-    tr_tok = train.select("lang", F.explode("tokens").alias("token"))
-    # cnt_lt is (lang x vocab)-bounded — checkpoint it once and DERIVE
-    # tot_l/vocab/vsize from it instead of re-planning the corpus
-    # tokenize+explode per aggregate, and fold n_train over prior's own
-    # lang-bounded rows instead of a separate corpus count (r15, the
-    # cv_grid pattern: 6 corpus scans -> 3 in the executed plan; sum of
-    # counts = row total and distinct tokens are integer identities, so
-    # values are bit-identical).
-    cnt_lt = (
-        tr_tok.groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    tot_l = cnt_lt.groupBy("lang").agg(F.sum("c").alias("tot"))
-    vocab = cnt_lt.select("token").distinct()
-    vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    prior = _with_n_train(train.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
-    te_tok = (
-        test.select("doc_id", F.col("lang").alias("true_lang"), F.explode("tokens").alias("token"))
-        .join(vocab, "token")
-        .groupBy("doc_id", "true_lang", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    log_lik = F.round(
-        F.log((F.coalesce(F.col("c"), F.lit(0)) + 1.0) / (F.col("tot") + F.col("v"))), 6
-    )
-    log_prior = F.round(
-        F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6
-    )
-    scored = (
-        te_tok.crossJoin(
-            F.broadcast(prior.select(F.col("lang").alias("cand_lang"), "n_docs", "n_train"))
-        )
-        .join(
-            F.broadcast(tot_l.select(F.col("lang").alias("cand_lang"), "tot")),
-            "cand_lang",
-        )
-        .crossJoin(F.broadcast(vsize))
-        .join(
-            cnt_lt.select(F.col("lang").alias("cand_lang"), "token", "c"),
-            ["cand_lang", "token"],
-            "left",
-        )
-        .groupBy("doc_id", "true_lang", "cand_lang")
-        .agg(
-            (
-                F.first(log_prior).cast("decimal(28,6)")
-                + F.sum((F.col("tf") * log_lik).cast("decimal(28,6)"))
-            ).alias("score")
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand_lang"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "true_lang",
-            F.col("cand_lang").alias("pred_lang"),
-            F.col("score").cast("double").alias("nb_log_score"),
-        )
+    Body: the md5-band split, then the library's own
+    ``nb_score(nb_fit(train), test, alpha=1.0)`` (one NB implementation;
+    see nb_fit for the plan shape). Each held-out doc's true lang rides
+    through scoring inside a struct id, so no join brings it back."""
+    train, test = split_train_test(load(spark, sf_dir, "documents"))
+    keyed = test.select(F.struct("doc_id", F.col("lang").alias("true_lang")).alias("key"), "text")
+    return nb_score(nb_fit(train), keyed, alpha=1.0, id_col="key").select(
+        "key.doc_id", "key.true_lang", "pred_lang", "nb_log_score"
     )
 
 
@@ -1236,8 +1160,70 @@ def tfidf_pipeline_features(
     )
 
 
-def nb_classify(
-    train: DataFrame,
+class NBModel(NamedTuple):
+    """``nb_fit``'s model: three label- or vocabulary-bounded tables."""
+
+    #: (lang, token, c): per-(label, token) training counts
+    counts: DataFrame
+    #: (token): the training vocabulary
+    vocab: DataFrame
+    #: (lang, n_docs, n_train, tot, v): one row per label with its doc
+    #: count, the training doc count, its token total and the vocab size
+    labels: DataFrame
+
+
+_NB_MODEL_COLS = {
+    "counts": ("lang", "token", "c"),
+    "vocab": ("token",),
+    "labels": ("lang", "n_docs", "n_train", "tot", "v"),
+}
+
+
+def _nb_tokens(text_col: str):
+    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+
+
+def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text") -> NBModel:
+    """Build step of relational multinomial Naive Bayes: train on
+    (label_col, text_col) and return the small ``NBModel`` that
+    ``nb_score`` scores against. Tokens are the non-empty pieces of a
+    split on single spaces.
+
+    Plan shape (r15's single training pass): one checkpointed (label x
+    vocab)-bounded count table feeds the vocabulary and every per-label
+    statistic, and n_train folds over the per-label doc counts
+    (_with_n_train). The cut points are lazy (``localCheckpoint(eager=
+    False)``): a one-shot fit+score runs as one plan, and the first
+    action that reads the model materializes it, after which every
+    further score reads the materialized tables.
+
+    Reuse: ``nb_classify`` keeps the model of a PERSISTED ``train``
+    (``serving.built_for``) for as long as the same Spark cache entry
+    backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
+    re-cache it builds a fresh one, and an unpersisted ``train`` is never
+    memoized. Call nb_fit directly to hold a model yourself."""
+    require_columns("nb_fit", "train", train, (label_col, text_col))
+    tr = train.select(F.col(label_col).alias("lang"), _nb_tokens(text_col).alias("tokens"))
+    counts = (
+        tr.select("lang", F.explode("tokens").alias("token"))
+        .groupBy("lang", "token")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .localCheckpoint(eager=False)
+    )
+    vocab = counts.select("token").distinct().localCheckpoint(eager=False)
+    per_label = counts.groupBy("lang").agg(F.sum("c").alias("tot")).crossJoin(
+        vocab.agg(F.count(F.lit(1)).alias("v"))
+    )
+    labels = (
+        _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
+        .join(per_label, "lang")
+        .localCheckpoint(eager=False)
+    )
+    return NBModel(counts, vocab, labels)
+
+
+def nb_score(
+    model: NBModel,
     test: DataFrame,
     *,
     alpha: float = 1.0,
@@ -1245,57 +1231,29 @@ def nb_classify(
     label_col: str = "lang",
     text_col: str = "text",
 ) -> DataFrame:
-    """PRODUCTION relational multinomial Naive Bayes — the reference
-    repo's core use case (train a text classifier, score a corpus) as a
-    parameterized library entry over ANY labeled/unlabeled frame pair:
-    train on (id, label, text), score (id, text), return one row per
-    scoreable test doc as (id_col, pred label, nb_log_score). Lidstone
-    smoothing is caller-chosen (``alpha``; 1.0 = add-one = the declared
-    ``ml_nb_relational_twin``, whose split this function reproduces
-    bit-for-bit at alpha=1.0 — pinned by tests/test_r10_library.py).
-    Test docs sharing NO train-vocabulary token have no evidence and
-    emit no row (standard NB scoring drops out-of-vocab tokens).
+    """Score step of relational multinomial Naive Bayes: one row per
+    scoreable doc of ``test`` (id_col, text_col) as (id_col,
+    pred_<label_col>, nb_log_score). Reads only the request's rows and
+    ``model`` (``nb_fit``'s), so one model serves any number of requests
+    without retraining: ``nb_classify`` passes the model it keeps for a
+    persisted train until that train's cache entry changes (see nb_fit).
+    Raises ValueError when ``alpha`` <= 0 or when the model or ``test``
+    lacks its expected columns.
 
-    Math (the twin's oracle-proven discipline): prior log(n_c/n_train),
-    likelihood log((c + alpha)/(tot_c + alpha·V)) over the train vocab,
-    each log factor rounded to 6 decimals pre-sum and the per-(doc,
-    label) sum accumulated in DECIMAL(28,6) so partial-aggregation
-    order cannot move the result; argmax ties to the alphabetically
-    first label.
-
-    Scale shape — the twin's: the model is two vocabulary-sized tables
-    (per-label token counts, per-label totals) plus two scalars, all
-    BROADCAST; scoring is one map-side join over the test token stream
-    followed by a (doc, label)-keyed partial agg; training is one
-    token-keyed combine. No corpus self-join anywhere. MLlib's
-    NaiveBayes (ml/pipeline.py) stays the production surface when
-    HashingTF features are wanted; this is the engine-native form whose
-    every number a DuckDB oracle can replay."""
+    Math: prior log(n_c/n_train), likelihood log((c + alpha)/(tot_c +
+    alpha·V)) over the train vocab, each log factor rounded to 6
+    decimals pre-sum and the per-(doc, label) sum accumulated in
+    DECIMAL(28,6) so partial-aggregation order cannot move the result;
+    argmax ties to the alphabetically first label. Test tokens outside
+    the train vocab are dropped; a doc with none left emits no row."""
     if alpha <= 0:
-        raise ValueError(f"nb_classify: need alpha > 0, got {alpha}")
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    tr = train.select(
-        F.col(label_col).alias("lang"), toks.alias("tokens")
-    )
-    te = test.select(F.col(id_col).alias("doc_id"), toks.alias("tokens"))
-
-    tr_tok = tr.select("lang", F.explode("tokens").alias("token"))
-    # One checkpointed (label x vocab)-bounded count table feeds every
-    # derived training statistic; n_train folds over prior's own rows —
-    # the r15 single-training-pass shape shared with the declared twin
-    # (see ml_nb_relational_twin for the scan-count evidence).
-    cnt_lt = (
-        tr_tok.groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    tot_l = cnt_lt.groupBy("lang").agg(F.sum("c").alias("tot"))
-    vocab = cnt_lt.select("token").distinct()
-    vsize = vocab.agg(F.count(F.lit(1)).alias("v"))
-    prior = _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
+        raise ValueError(f"nb_score: need alpha > 0, got {alpha}")
+    for name, cols in _NB_MODEL_COLS.items():
+        require_columns("nb_score", f"model.{name}", getattr(model, name), cols)
+    require_columns("nb_score", "test", test, (id_col, text_col))
     te_tok = (
-        te.select("doc_id", F.explode("tokens").alias("token"))
-        .join(vocab, "token")
+        test.select(F.col(id_col).alias("doc_id"), F.explode(_nb_tokens(text_col)).alias("token"))
+        .join(model.vocab, "token")
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -1308,18 +1266,9 @@ def nb_classify(
     )
     log_prior = F.round(F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6)
     scored = (
-        te_tok.crossJoin(
-            F.broadcast(
-                prior.select(F.col("lang").alias("cand_lang"), "n_docs", "n_train")
-            )
-        )
+        te_tok.crossJoin(F.broadcast(model.labels.withColumnRenamed("lang", "cand_lang")))
         .join(
-            F.broadcast(tot_l.select(F.col("lang").alias("cand_lang"), "tot")),
-            "cand_lang",
-        )
-        .crossJoin(F.broadcast(vsize))
-        .join(
-            cnt_lt.select(F.col("lang").alias("cand_lang"), "token", "c"),
+            model.counts.withColumnRenamed("lang", "cand_lang"),
             ["cand_lang", "token"],
             "left",
         )
@@ -1341,6 +1290,45 @@ def nb_classify(
             F.col("score").cast("double").alias("nb_log_score"),
         )
     )
+
+
+def nb_classify(
+    train: DataFrame,
+    test: DataFrame,
+    *,
+    alpha: float = 1.0,
+    id_col: str = "doc_id",
+    label_col: str = "lang",
+    text_col: str = "text",
+) -> DataFrame:
+    """PRODUCTION relational multinomial Naive Bayes — the reference
+    repo's core use case (train a text classifier, score a corpus) as a
+    parameterized library entry over ANY labeled/unlabeled frame pair:
+    ``nb_score(nb_fit(train), test)``. Train on (id, label, text), score
+    (id, text), return one row per scoreable test doc as (id_col, pred
+    label, nb_log_score). Lidstone smoothing is caller-chosen
+    (``alpha``; 1.0 = add-one = the declared ``ml_nb_relational_twin``,
+    which is this call on its md5-band split).
+
+    Build once, serve many: when ``train`` is persisted, its model is
+    built once and reused by every later call for as long as the same
+    Spark cache entry backs ``train`` (see nb_fit and serving.built_for);
+    an unpersisted ``train`` is fitted in the same plan as the scoring.
+
+    Scale shape: the model is two vocabulary-sized tables (per-label
+    token counts, the vocabulary) plus one row per label, the last
+    BROADCAST; scoring is one map-side join over the test token stream
+    followed by a (doc, label)-keyed partial agg; training is one
+    token-keyed combine. No corpus self-join anywhere. MLlib's
+    NaiveBayes (ml/pipeline.py) stays the production surface when
+    HashingTF features are wanted; this is the engine-native form whose
+    every number a DuckDB oracle can replay."""
+    model = built_for(
+        train,
+        ("nb_fit", label_col, text_col),
+        lambda: nb_fit(train, label_col=label_col, text_col=text_col),
+    )
+    return nb_score(model, test, alpha=alpha, id_col=id_col, label_col=label_col, text_col=text_col)
 
 
 #: ml_nb_library_classify smoothing — deliberately NOT the twin's
@@ -1375,26 +1363,7 @@ def ml_nb_library_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast tables plus two scalars; scoring is one map-side join over
     the test token stream + a (doc, label)-keyed partial agg; training
     is one token-keyed combine. No corpus self-join."""
-    d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "#", F.col("doc_id").cast("string"), F.lit(str(_NB_SEED))
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
-    docs = d.select("doc_id", "lang", "text", bucket.alias("bucket"))
-    train = docs.filter(F.col("bucket") < _NB_CUT)
-    test = docs.filter(F.col("bucket") >= _NB_CUT)
+    train, test = split_train_test(load(spark, sf_dir, "documents"))
     return nb_classify(train, test, alpha=_LIB_NB_ALPHA)
 
 

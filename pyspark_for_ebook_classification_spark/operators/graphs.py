@@ -518,14 +518,14 @@ def _gather_ready(bidir: DataFrame) -> DataFrame:
     and locally the round join is a broadcast that ignores the
     pre-partitioning anyway. The stage-cache reuse above delivers the
     verdict's goal (one edge exchange per segment, 'or AQE
-    equivalent') without pinning a partition count at all."""
-    return (
-        bidir.select(
-            F.coalesce(F.col("node"), F.lit(0).cast("bigint")).alias("node"),
-            F.coalesce(F.col("other"), F.lit(0).cast("bigint")).alias("other"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    equivalent') without pinning a partition count at all.
+
+    The zero literal takes each column's own type, so an int-keyed
+    graph keeps int node ids (a bigint literal would widen them)."""
+    types = {f.name: f.dataType for f in bidir.schema.fields}
+    return bidir.select(
+        *(F.coalesce(F.col(c), F.lit(0).cast(types[c])).alias(c) for c in ("node", "other"))
+    ).localCheckpoint(eager=False)
 
 
 def _hindex_round(bidir: DataFrame, c: DataFrame) -> DataFrame:

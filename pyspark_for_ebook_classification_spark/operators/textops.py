@@ -10,12 +10,15 @@ groupBy, no Python in the loop, no driver-side vocabulary.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_for_ebook_classification_spark.functions.numeric import davg, sql_davg
 from pyspark_for_ebook_classification_spark.operators.dedup import ANCHOR_K
 from pyspark_for_ebook_classification_spark.plans.registry import query
+from pyspark_for_ebook_classification_spark.serving import built_for, require_columns
 from pyspark_for_ebook_classification_spark.sources.io import load
 
 STOPWORDS = ("the", "of", "and", "a", "to", "in", "is", "it", "on", "for")
@@ -1732,50 +1735,75 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bm25_search(
-    docs: DataFrame,
+class BM25Index(NamedTuple):
+    """``bm25_index``'s corpus-side state."""
+
+    #: (doc_id, token, tf, dl): term counts with each doc's length
+    tf: DataFrame
+    #: one row (n_docs, total_tokens)
+    stats: DataFrame
+    #: (token, df): document frequency of each corpus token
+    df: DataFrame
+
+
+_BM25_INDEX_COLS = {
+    "tf": ("doc_id", "token", "tf", "dl"),
+    "stats": ("n_docs", "total_tokens"),
+    "df": ("token", "df"),
+}
+
+
+def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> BM25Index:
+    """Build step of ``bm25_search``: the corpus tf table (with dl), the
+    one-row stats and the df table, all from ONE corpus pass
+    (_bm25_tf_stats). Tokens are the non-empty pieces of a split on
+    single spaces. The cut points are lazy (``localCheckpoint(eager=
+    False)``), so a one-shot index+query runs as one plan; the first
+    action that reads the index materializes it, and every later query
+    reads the materialized tables.
+
+    Reuse: ``bm25_search`` keeps the index of a PERSISTED ``docs``
+    (``serving.built_for``) for as long as the same Spark cache entry
+    backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
+    re-cache it builds a fresh one, and an unpersisted ``docs`` is never
+    memoized. Call bm25_index directly to hold an index yourself."""
+    require_columns("bm25_index", "docs", docs, (id_col, text_col))
+    toks = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("tokens"),
+    )
+    tf, stats = _bm25_tf_stats(toks)
+    dfr = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(eager=False)
+    return BM25Index(tf, stats, dfr)
+
+
+def bm25_query(
+    index: BM25Index,
     queries: list[str],
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """PRODUCTION BM25 entry point: rank ``docs`` against ad-hoc query
-    STRINGS (the declared ``text_bm25_topk`` query fixes its workload to
-    corpus-derived queries so a DuckDB oracle can replay it, and applies
-    a Σdf posting budget to its auto-selected terms; ad-hoc user terms
-    here are kept regardless of df — silently dropping a user's common
-    term would be surprising, and a user query has ~few terms, not a
-    corpus of them). Returns
-    (query, <id_col>, bm25, rank) — top-``k`` docs per query string.
-
-    Same scale shape as the declared query: one tokenize+explode+combine
-    builds the (doc, token, tf) table; the query-term table — |queries| ×
-    their distinct whitespace tokens, built driver-side from plain
-    strings — BROADCASTS to it, so the corpus-sized side never shuffles
-    to be probed; per-(query,doc) partial-aggregated sum; top-k is a
-    WindowGroupLimit. Unmatched query terms contribute nothing (df from
-    the corpus; terms absent from the corpus have no tf rows); a query
-    with no matching term returns no rows."""
-    spark = docs.sparkSession
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("tokens"),
-    )
-    # dl rides through the tf aggregation — same r14 rewrite as
-    # bm25_scored (one fewer corpus pass + doc_id join; identical
-    # values); r15: one shared checkpointed tf pass + folded stats
-    # (zero-token docs preserved via explode_outer) — _bm25_tf_stats.
-    tf, stats = _bm25_tf_stats(toks)
-    dfr = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    qterms = spark.createDataFrame(
+    """Score step of ``bm25_search``: rank the indexed corpus against
+    ``queries`` and return (query, <id_col>, bm25, rank), top-``k`` docs
+    per query string. Reads only the query strings and ``index``
+    (``bm25_index``'s), so one index serves any number of queries:
+    ``bm25_search`` passes the index it keeps for a persisted corpus
+    until that corpus's cache entry changes (see bm25_index). Raises
+    ValueError when ``queries`` is not a list of strings or the index
+    lacks its expected columns."""
+    if isinstance(queries, str) or not all(isinstance(q, str) for q in queries):
+        raise ValueError(f"bm25_query: queries must be a list of strings, got {queries!r}")
+    for name, cols in _BM25_INDEX_COLS.items():
+        require_columns("bm25_query", f"index.{name}", getattr(index, name), cols)
+    qterms = index.tf.sparkSession.createDataFrame(
         [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
         "query string, token string",
     )
     qt = (
-        qterms.join(dfr, "token")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
+        qterms.join(index.df, "token")
+        .crossJoin(F.broadcast(index.stats.select("n_docs")))
         .select(
             "query",
             "token",
@@ -1793,8 +1821,8 @@ def bm25_search(
         )
     )
     scored = (
-        tf.join(F.broadcast(qt), "token")
-        .crossJoin(F.broadcast(stats))
+        index.tf.join(F.broadcast(qt), "token")
+        .crossJoin(F.broadcast(index.stats))
         .select("query", "doc_id", contrib.alias("c"))
         .groupBy("query", "doc_id")
         .agg(F.sum(F.col("c").cast("decimal(28,6)")).cast("double").alias("score"))
@@ -1810,6 +1838,46 @@ def bm25_search(
             "rank",
         )
     )
+
+
+def bm25_search(
+    docs: DataFrame,
+    queries: list[str],
+    k: int = 10,
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """PRODUCTION BM25 entry point: rank ``docs`` against ad-hoc query
+    STRINGS, ``bm25_query(bm25_index(docs), queries)`` (the declared
+    ``text_bm25_topk`` query fixes its workload to corpus-derived queries
+    so a DuckDB oracle can replay it, and applies a Σdf posting budget to
+    its auto-selected terms; ad-hoc user terms here are kept regardless
+    of df — silently dropping a user's common term would be surprising,
+    and a user query has ~few terms, not a corpus of them). Returns
+    (query, <id_col>, bm25, rank) — top-``k`` docs per query string.
+
+    Build once, serve many: when ``docs`` is persisted, its index is
+    built once and reused by every later call for as long as the same
+    Spark cache entry backs ``docs`` (see bm25_index and
+    serving.built_for); an unpersisted ``docs`` is indexed in the same
+    plan as the scoring.
+
+    Same scale shape as the declared query: one tokenize+explode+combine
+    builds the (doc, token, tf) table; the query-term table — |queries| ×
+    their distinct whitespace tokens, built driver-side from plain
+    strings — BROADCASTS to it, so the corpus-sized side never shuffles
+    to be probed; per-(query,doc) partial-aggregated sum; top-k is a
+    WindowGroupLimit. Unmatched query terms contribute nothing (df from
+    the corpus; terms absent from the corpus have no tf rows); a query
+    with no matching term returns no rows."""
+    index = built_for(
+        docs,
+        ("bm25_index", id_col, text_col),
+        lambda: bm25_index(docs, id_col=id_col, text_col=text_col),
+    )
+    return bm25_query(index, queries, k=k, k1=k1, b=b, id_col=id_col)
 
 
 # --------------------------------------------- BPE merge-loop trainer (L6)

@@ -229,3 +229,19 @@ def test_kcore_converged_on_deep_graph(spark):
         for r in kcore_converged(bidir, hub_safe=True).collect()
     }
     assert safe == expected
+
+
+def test_kcore_converged_keeps_int_node_type(spark):
+    """_gather_ready pads its non-nullable key columns with a zero of each
+    column's own type: an int-keyed edge list keeps an int node column
+    (coreness is the bigint h-index state whatever the key type)."""
+    from pyspark_for_ebook_classification_spark.operators.graphs import kcore_converged
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4)]  # a triangle plus a pendant
+    bidir = spark.createDataFrame(edges + [(b, a) for a, b in edges], "node int, other int")
+    out = kcore_converged(bidir)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("node", "int"),
+        ("coreness", "bigint"),
+    ]
+    assert {r.node: r.coreness for r in out.collect()} == {1: 2, 2: 2, 3: 2, 4: 1}

@@ -5,10 +5,13 @@ threshold validation.
 
 from __future__ import annotations
 
+import gc
+import weakref
 from collections import Counter
 
 import pytest
 
+from pyspark_for_ebook_classification_spark import serving
 from pyspark_for_ebook_classification_spark.operators.dedup import exact_dedup
 from pyspark_for_ebook_classification_spark.operators.textops import gopher_gate
 from pyspark_for_ebook_classification_spark.plans.registry import all_queries
@@ -164,45 +167,22 @@ def test_semdedup_validation(spark, kwargs):
         semdedup(vecs, label_col=None, **kwargs)
 
 
-def test_nb_classify_matches_registered_twin(spark, sf_dir):
-    """nb_classify at alpha=1.0 on the twin's own md5-band split must
-    reproduce ml_nb_relational_twin's predictions and scores exactly."""
-    from pyspark.sql import functions as F
+_NB_TRAIN = [
+    (1, "spam", "buy cheap pills now buy now"),
+    (2, "spam", "cheap pills cheap offer"),
+    (3, "ham", "meeting notes agenda project"),
+    (4, "ham", "project meeting tomorrow agenda"),
+]
+_NB_TRAIN_SCHEMA = "doc_id int, lang string, text string"
+_NB_TEST = [
+    (10, "buy pills cheap"),
+    (11, "project agenda meeting"),
+    (12, "zzz qqq www"),  # fully out-of-vocab
+]
 
-    from pyspark_for_ebook_classification_spark.ml.queries import (
-        _NB_CUT,
-        _NB_SEED,
-        nb_classify,
-    )
 
-    expected = {
-        r.doc_id: (r.pred_lang, r.nb_log_score)
-        for r in all_queries()["ml_nb_relational_twin"].fn(spark, sf_dir).collect()
-    }
-    d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "#", F.col("doc_id").cast("string"), F.lit(str(_NB_SEED))
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
-    train = d.filter(bucket < _NB_CUT)
-    test = d.filter(bucket >= _NB_CUT)
-    got = {
-        r.doc_id: (r.pred_lang, r.nb_log_score)
-        for r in nb_classify(train, test, alpha=1.0).collect()
-    }
-    assert got == expected
+def _nb_test(spark, rows=_NB_TEST):
+    return spark.createDataFrame(rows, "doc_id int, text string")
 
 
 def test_nb_classify_planted(spark):
@@ -210,23 +190,8 @@ def test_nb_classify_planted(spark):
     vocabulary classify to that class; an all-OOV doc emits no row."""
     from pyspark_for_ebook_classification_spark.ml.queries import nb_classify
 
-    train = spark.createDataFrame(
-        [
-            (1, "spam", "buy cheap pills now buy now"),
-            (2, "spam", "cheap pills cheap offer"),
-            (3, "ham", "meeting notes agenda project"),
-            (4, "ham", "project meeting tomorrow agenda"),
-        ],
-        "doc_id int, lang string, text string",
-    )
-    test = spark.createDataFrame(
-        [
-            (10, "buy pills cheap"),
-            (11, "project agenda meeting"),
-            (12, "zzz qqq www"),  # fully out-of-vocab
-        ],
-        "doc_id int, text string",
-    )
+    train = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA)
+    test = _nb_test(spark)
     out = {r.doc_id: r.pred_lang for r in nb_classify(train, test).collect()}
     assert out == {10: "spam", 11: "ham"}
 
@@ -257,6 +222,137 @@ def test_nb_classify_custom_columns_and_alpha(spark):
 
     with _pytest.raises(ValueError):
         nb_classify(train, test, alpha=0.0)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_nb_classify_is_fit_then_score(spark):
+    """The one-shot entry is exactly its two steps, at default and custom
+    columns and smoothing."""
+    from pyspark_for_ebook_classification_spark.ml.queries import nb_classify, nb_fit, nb_score
+
+    train = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA)
+    test = _nb_test(spark)
+    assert _rows(nb_classify(train, test)) == _rows(nb_score(nb_fit(train), test))
+    assert _rows(nb_classify(train, test, alpha=0.5)) == _rows(
+        nb_score(nb_fit(train), test, alpha=0.5)
+    )
+    renamed = train.toDF("uri", "sentiment", "body")
+    req = test.toDF("uri", "body")
+    cols = dict(id_col="uri", label_col="sentiment", text_col="body")
+    model = nb_fit(renamed, label_col="sentiment", text_col="body")
+    assert _rows(nb_classify(renamed, req, **cols)) == _rows(nb_score(model, req, **cols))
+
+
+def test_nb_classify_reuses_model_of_persisted_train(spark, count_jobs):
+    """A persisted train is fitted once: a second request with new test
+    rows starts fewer Spark jobs than the first and returns the rows an
+    unpersisted call on the same data returns. An unpersisted train
+    leaves the memo empty."""
+    from pyspark_for_ebook_classification_spark.ml.queries import nb_classify
+
+    plain = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA)
+    assert _rows(nb_classify(plain, _nb_test(spark)))
+    assert plain not in serving._MEMO
+
+    train = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA).cache()
+    try:
+        first, jobs_first = count_jobs(lambda: _rows(nb_classify(train, _nb_test(spark))))
+        req = _nb_test(spark, [(20, "cheap offer now"), (21, "agenda tomorrow")])
+        second, jobs_second = count_jobs(lambda: _rows(nb_classify(train, req)))
+        assert train in serving._MEMO
+        assert jobs_second < jobs_first
+        assert first == _rows(nb_classify(plain, _nb_test(spark)))
+        assert second == _rows(nb_classify(plain, req))
+    finally:
+        train.unpersist()
+
+
+def test_nb_classify_refits_when_cache_entry_changes(spark, tmp_path):
+    """The memo follows the cache entry, not the frame: after the data
+    under a persisted train is overwritten (Spark re-caches the path),
+    after unpersist(), and after a re-cache followed by another
+    overwrite, the result reflects the data the frame reads now."""
+    from pyspark_for_ebook_classification_spark.ml.queries import nb_classify
+
+    path = str(tmp_path / "train")
+    flipped = [(d, "ham" if lang == "spam" else "spam", text) for d, lang, text in _NB_TRAIN]
+    spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA).write.parquet(path)
+    train = spark.read.parquet(path).cache()
+    test = _nb_test(spark)
+
+    def preds():
+        return {r.doc_id: r.pred_lang for r in nb_classify(train, test).collect()}
+
+    try:
+        assert preds() == {10: "spam", 11: "ham"}
+        spark.createDataFrame(flipped, _NB_TRAIN_SCHEMA).write.mode("overwrite").parquet(path)
+        assert preds() == {10: "ham", 11: "spam"}
+        train.unpersist()
+        assert preds() == {10: "ham", 11: "spam"}
+        assert train not in serving._MEMO
+        train.cache()
+        assert preds() == {10: "ham", 11: "spam"}
+        assert train in serving._MEMO
+        spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA).write.mode("overwrite").parquet(path)
+        assert preds() == {10: "spam", 11: "ham"}
+    finally:
+        train.unpersist()
+
+
+def test_nb_memo_entry_dies_with_its_frame(spark):
+    """The memo holds its input frames weakly: dropping the last
+    reference to a persisted train drops its model."""
+    from pyspark_for_ebook_classification_spark.ml.queries import nb_classify
+
+    train = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA).cache()
+    jdf = train._jdf
+    nb_classify(train, _nb_test(spark)).collect()
+    assert train in serving._MEMO
+    n_before = len(serving._MEMO)
+    ref = weakref.ref(train)
+    del train
+    gc.collect()
+    assert ref() is None
+    assert len(serving._MEMO) < n_before
+    jdf.unpersist(False)
+
+
+def test_nb_bad_input_fails_loudly_and_keeps_the_model(spark):
+    """Missing columns in the request or the model raise a ValueError
+    naming them; a failed build stores nothing; the next good request
+    still scores from the memoized model."""
+    from pyspark_for_ebook_classification_spark.ml.queries import nb_classify, nb_fit, nb_score
+
+    train = spark.createDataFrame(_NB_TRAIN, _NB_TRAIN_SCHEMA).cache()
+    unlabeled = spark.createDataFrame([(1, "buy now")], "doc_id int, text string").cache()
+    try:
+        good = _rows(nb_classify(train, _nb_test(spark)))
+        with pytest.raises(ValueError, match="test lacks column"):
+            nb_classify(train, _nb_test(spark).withColumnRenamed("text", "body"))
+        model = nb_fit(train)
+        with pytest.raises(ValueError, match="model.labels lacks column"):
+            nb_score(model._replace(labels=model.labels.drop("v")), _nb_test(spark))
+        with pytest.raises(ValueError, match="train lacks column"):
+            nb_classify(unlabeled, _nb_test(spark))
+        assert unlabeled not in serving._MEMO
+        assert train in serving._MEMO
+        assert _rows(nb_classify(train, _nb_test(spark))) == good
+    finally:
+        train.unpersist()
+        unlabeled.unpersist()
+
+
+def test_nb_library_classify_repeats_in_one_session(spark, sf_dir):
+    """Two runs of the registered NB library query in one session return
+    the same rows and leave no memo entry behind."""
+    q = all_queries()["ml_nb_library_classify"]
+    n_memo = len(serving._MEMO)
+    first = _rows(q.fn(spark, sf_dir))
+    assert first and _rows(q.fn(spark, sf_dir)) == first
+    assert len(serving._MEMO) == n_memo
 
 
 def test_bpe_apply_of_trained_merges_matches_encode_query(spark, sf_dir):

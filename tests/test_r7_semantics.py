@@ -5,12 +5,16 @@ pure-Python/numpy reimplementation of BM25 and reciprocal-rank fusion.
 
 from __future__ import annotations
 
+import gc
 import math
+import weakref
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
+import pytest
 
+from pyspark_for_ebook_classification_spark import serving
 from pyspark_for_ebook_classification_spark.operators.textops import (
     BM25_QUERY_MOD,
     BM25_TERMS,
@@ -312,6 +316,15 @@ def test_rrf_fuse_input_hygiene(spark):
         rrf_fuse([bad]).collect()
 
 
+_BM25_ROWS = [
+    (1, "alpha beta alpha"),
+    (2, "beta gamma"),
+    (3, ""),  # zero-token: split("") -> [""] filtered -> []
+    (4, "  "),  # whitespace-only: also zero tokens
+    (5, "alpha delta delta gamma"),
+]
+
+
 def test_bm25_search_counts_zero_token_docs_in_stats(spark):
     """r15 (_bm25_tf_stats): the corpus stats now FOLD over the
     checkpointed tf table instead of running their own corpus pass, with
@@ -322,13 +335,7 @@ def test_bm25_search_counts_zero_token_docs_in_stats(spark):
     pure-Python reference over the full doc set."""
     from pyspark_for_ebook_classification_spark.operators.textops import bm25_search
 
-    rows = [
-        (1, "alpha beta alpha"),
-        (2, "beta gamma"),
-        (3, ""),  # zero-token: split("") -> [""] filtered -> []
-        (4, "  "),  # whitespace-only: also zero tokens
-        (5, "alpha delta delta gamma"),
-    ]
+    rows = _BM25_ROWS
     docs = {d: [t for t in txt.split(" ") if t] for d, txt in rows}
     n_docs = len(docs)  # 5, INCLUDING the two empty docs
     avgdl = float(sum(len(t) for t in docs.values())) / n_docs
@@ -364,3 +371,129 @@ def test_bm25_search_counts_zero_token_docs_in_stats(spark):
     }
     assert got == expected
     assert all(d not in (3, 4) for _, d in got)  # empty docs never score
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _bm25_docs(spark, rows=_BM25_ROWS):
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def test_bm25_search_is_index_then_query(spark):
+    """The one-shot entry is exactly its two steps, at default and custom
+    columns and scoring parameters."""
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+        bm25_search,
+    )
+
+    docs = _bm25_docs(spark)
+    qs = ["alpha gamma", "delta", "zzz"]
+    assert _rows(bm25_search(docs, qs, k=3)) == _rows(bm25_query(bm25_index(docs), qs, k=3))
+    renamed = docs.toDF("uri", "body")
+    got = bm25_search(renamed, qs, k=2, k1=2.0, b=0.5, id_col="uri", text_col="body")
+    index = bm25_index(renamed, id_col="uri", text_col="body")
+    assert _rows(got) == _rows(bm25_query(index, qs, k=2, k1=2.0, b=0.5, id_col="uri"))
+
+
+def test_bm25_search_reuses_index_of_persisted_docs(spark, count_jobs):
+    """A persisted corpus is indexed once: a second call with a new query
+    string starts fewer Spark jobs than the first and returns the rows an
+    unpersisted call on the same data returns. An unpersisted corpus
+    leaves the memo empty."""
+    from pyspark_for_ebook_classification_spark.operators.textops import bm25_search
+
+    plain = _bm25_docs(spark)
+    assert _rows(bm25_search(plain, ["alpha"], k=5))
+    assert plain not in serving._MEMO
+
+    docs = _bm25_docs(spark).cache()
+    try:
+        first, jobs_first = count_jobs(lambda: _rows(bm25_search(docs, ["alpha gamma"], k=5)))
+        second, jobs_second = count_jobs(lambda: _rows(bm25_search(docs, ["beta delta"], k=5)))
+        assert docs in serving._MEMO
+        assert jobs_second < jobs_first
+        assert first == _rows(bm25_search(plain, ["alpha gamma"], k=5))
+        assert second == _rows(bm25_search(plain, ["beta delta"], k=5))
+    finally:
+        docs.unpersist()
+
+
+def test_bm25_search_reindexes_when_cache_entry_changes(spark, tmp_path):
+    """After the data under a persisted corpus is overwritten (Spark
+    re-caches the path), after unpersist(), and after a re-cache followed
+    by another overwrite, the result reflects the data the frame reads
+    now."""
+    from pyspark_for_ebook_classification_spark.operators.textops import bm25_search
+
+    path = str(tmp_path / "docs")
+    moved = [(d, "omega " + t) if d == 2 else (d, t) for d, t in _BM25_ROWS]
+    _bm25_docs(spark).write.parquet(path)
+    docs = spark.read.parquet(path).cache()
+
+    def hits():
+        return {r.doc_id for r in bm25_search(docs, ["omega"], k=5).collect()}
+
+    try:
+        assert hits() == set()
+        _bm25_docs(spark, moved).write.mode("overwrite").parquet(path)
+        assert hits() == {2}
+        docs.unpersist()
+        assert hits() == {2}
+        assert docs not in serving._MEMO
+        docs.cache()
+        assert hits() == {2}
+        assert docs in serving._MEMO
+        _bm25_docs(spark).write.mode("overwrite").parquet(path)
+        assert hits() == set()
+    finally:
+        docs.unpersist()
+
+
+def test_bm25_memo_entry_dies_with_its_frame(spark):
+    """Dropping the last reference to a persisted corpus drops its index."""
+    from pyspark_for_ebook_classification_spark.operators.textops import bm25_search
+
+    docs = _bm25_docs(spark).cache()
+    jdf = docs._jdf
+    bm25_search(docs, ["alpha"], k=5).collect()
+    assert docs in serving._MEMO
+    n_before = len(serving._MEMO)
+    ref = weakref.ref(docs)
+    del docs
+    gc.collect()
+    assert ref() is None
+    assert len(serving._MEMO) < n_before
+    jdf.unpersist(False)
+
+
+def test_bm25_bad_input_fails_loudly_and_keeps_the_index(spark):
+    """A bare string for ``queries``, a corpus without its text column and
+    an index without its columns raise a ValueError; a failed build stores
+    nothing; the next good request still scores from the memoized index."""
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+        bm25_search,
+    )
+
+    docs = _bm25_docs(spark).cache()
+    untexted = docs.toDF("doc_id", "body").cache()
+    try:
+        good = _rows(bm25_search(docs, ["alpha gamma"], k=5))
+        with pytest.raises(ValueError, match="list of strings"):
+            bm25_search(docs, "alpha gamma", k=5)
+        with pytest.raises(ValueError, match="docs lacks column"):
+            bm25_search(untexted, ["alpha"], k=5)
+        assert untexted not in serving._MEMO
+        index = bm25_index(docs)
+        with pytest.raises(ValueError, match="index.df lacks column"):
+            bm25_query(index._replace(df=index.df.drop("df")), ["alpha"])
+        assert docs in serving._MEMO
+        assert _rows(bm25_search(docs, ["alpha gamma"], k=5)) == good
+    finally:
+        docs.unpersist()
+        untexted.unpersist()
