@@ -129,26 +129,6 @@ def sql_lsh_bucket(
     return f"concat({bits})"
 
 
-def spark_lsh_tables(col: str) -> Column:
-    """Multi-table signatures: stack() rows of (table_id, bucket) — one
-    pass over the vector computes all L signatures; the caller explodes
-    them into the long form the bucket join needs."""
-    parts = []
-    for t in range(N_TABLES):
-        parts.append(str(t))
-        parts.append(
-            "concat("
-            + ", ".join(
-                _spark_bit(col, t * PLANES_PER_TABLE + p, DIM)
-                for p in range(PLANES_PER_TABLE)
-            )
-            + ")"
-        )
-    return F.expr(
-        f"stack({N_TABLES}, " + ", ".join(parts) + ") AS (table_id, bucket)"
-    )
-
-
 def sql_lsh_tables_union(src: str) -> str:
     """Oracle rendering: UNION ALL of one SELECT per table over ``src``
     (a relation exposing vec_id, embedding, nrm)."""

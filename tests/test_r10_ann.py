@@ -1,6 +1,7 @@
-"""Round-10: production ann_topk library entry — pinned against the
-registered brute-force and LSH queries at the default parameters, plus a
-planted fixture, parameter validation, and banding behavior.
+"""Round-10: production ann_topk library entry — a planted fixture,
+exact-rerank consistency, parameter validation, and banding behavior.
+The registered ANN queries call ann_topk directly; tests/test_oracle_parity.py
+checks them against DuckDB.
 """
 
 from __future__ import annotations
@@ -12,42 +13,12 @@ from pyspark_for_ebook_classification_spark.operators.similarity import (
     TOP_K,
     ann_topk,
 )
-from pyspark_for_ebook_classification_spark.plans.registry import all_queries
 from pyspark_for_ebook_classification_spark.sources.io import load
-
-
-def _rows(df):
-    return sorted(
-        (r.query_id, r.neighbor_id, r.cosine, r.rank) for r in df.collect()
-    )
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load(spark, sf_dir, "embeddings")
-
-
-def test_bruteforce_matches_registered_query(spark, sf_dir, emb):
-    """ann_topk(bruteforce) on the registry workload must equal
-    sim_topk_bruteforce row-for-row — the production path IS the
-    declared plan."""
-    expected = _rows(all_queries()["sim_topk_bruteforce"].fn(spark, sf_dir))
-    q = emb.filter(f"vec_id < {N_QUERIES}")
-    got = _rows(ann_topk(emb, q, k=TOP_K, method="bruteforce"))
-    assert got == expected
-
-
-def test_lsh_matches_registered_query(spark, sf_dir, emb):
-    """ann_topk(lsh) at the registered banding (4 tables × 4 planes,
-    offset 0) must equal sim_ann_lsh_bucketed row-for-row."""
-    expected = _rows(all_queries()["sim_ann_lsh_bucketed"].fn(spark, sf_dir))
-    q = emb.filter(f"vec_id < {N_QUERIES}")
-    got = _rows(
-        ann_topk(
-            emb, q, k=TOP_K, method="lsh", n_tables=4, planes_per_table=4
-        )
-    )
-    assert got == expected
 
 
 def test_planted_identical_vector_is_top1(spark):
@@ -113,24 +84,6 @@ def test_parameter_validation(spark, kwargs):
     )
     with pytest.raises(ValueError):
         ann_topk(df, df, **kwargs)
-
-
-def test_srp_multiprobe_matches_registered_query(spark, sf_dir, emb):
-    """ann_topk(srp_multiprobe) at the registered grid (8 bits, plane
-    family 48) must equal sim_ann_grid_multiprobe row-for-row."""
-    expected = _rows(all_queries()["sim_ann_grid_multiprobe"].fn(spark, sf_dir))
-    q = emb.filter(f"vec_id < {N_QUERIES}")
-    got = _rows(
-        ann_topk(
-            emb,
-            q,
-            k=TOP_K,
-            method="srp_multiprobe",
-            grid_bits=8,
-            plane_offset=48,
-        )
-    )
-    assert got == expected
 
 
 def test_srp_multiprobe_results_are_exact_cosines(spark, sf_dir, emb):

@@ -103,21 +103,6 @@ def test_gopher_gate_validation(spark, kwargs):
         gopher_gate(docs, **kwargs)
 
 
-def test_semdedup_matches_registered_query(spark, sf_dir):
-    """At the defaults on the labeled embeddings table, the library must
-    reproduce dedup_semantic_embedding row-for-row."""
-    from pyspark_for_ebook_classification_spark.operators.similarity import semdedup
-
-    expected = sorted(
-        tuple(r)
-        for r in all_queries()["dedup_semantic_embedding"].fn(spark, sf_dir).collect()
-    )
-    got = sorted(
-        tuple(r) for r in semdedup(load(spark, sf_dir, "embeddings")).collect()
-    )
-    assert got == expected
-
-
 def test_semdedup_planted_and_unlabeled(spark):
     """Identical vectors share every SRP bit (same cell at any depth):
     the higher id is dropped at tau below 1.0; an orthogonal vector is
