@@ -675,57 +675,12 @@ _TFIDF_TWIN_SQL = _tfidf_twin_sql()
 )
 def ml_tfidf_pipeline_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The feature half of the M1->M8 pipeline under the exact-value hash
-    gate (r8 verdict task 4 - the NB/LR twin pattern applied to the
-    FEATURIZER): RegexTokenizer(pattern=\\W+, lowercase) -> StopWordsRemover
-    (MLlib's default English list, frozen above) -> CountVectorizer-style
-    vocabulary under the same minDF=2 cut the M4/M5 bridge test uses ->
-    MLlib's IDF formula ln((N+1)/(df+1)) -> per-doc top-3 features by
-    tf*idf (ties to the alphabetically first term). Bridge test
-    tests/test_ml.py::test_tfidf_pipeline_twin_matches_mllib re-derives
-    every value from the actual MLlib stages, so the declared query, the
-    DuckDB oracle, and pyspark.ml form a three-engine agreement on the
-    pipeline's own outputs. idf is rounded to 6dp pre-product (libm
-    independence); tfidf = bigint tf x the SAME rounded double in both
-    engines, so products and the rank order are bit-identical.
-
-    Scale shape: one explode -> token-keyed partial agg builds the
-    vocabulary (df >= 2 keeps it domain-bounded); the idf table BROADCASTS
-    to the (doc,term) tf stream - the corpus-sized side never reshuffles -
-    and top-3 is a doc-keyed WindowGroupLimit, rank pushed before any
-    sort materializes. No collect, no driver-side vocabulary.
-    """
-    d = load(spark, sf_dir, "documents")
-    terms = F.filter(
-        F.split(F.lower(F.col("text")), r"\W+"), lambda t: t != ""
-    )
-    tok = (
-        d.select("doc_id", F.explode(terms).alias("term"))
-        .filter(~F.col("term").isin(*_EN_STOPWORDS))
-    )
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf = (
-        tok.groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= 2)
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "term",
-            "df",
-            F.round(
-                F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)), 6
-            ).alias("idf"),
-        )
-    )
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    feat = tf.join(F.broadcast(idf), "term").withColumn(
-        "tfidf", F.col("tf") * F.col("idf")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        feat.withColumn("feat_rank", F.row_number().over(w))
-        .filter(F.col("feat_rank") <= 3)
-        .select("doc_id", "feat_rank", "term", "tf", "df", "idf", "tfidf")
-    )
+    gate: ``tfidf_pipeline_features`` over the documents table at its
+    defaults (MLlib's English stop words, min_df=2, top-3 features per
+    doc). tests/test_ml.py::test_tfidf_pipeline_twin_matches_mllib
+    re-derives every value from the actual MLlib stages, so this query,
+    the DuckDB oracle and pyspark.ml agree on the pipeline's outputs."""
+    return tfidf_pipeline_features(load(spark, sf_dir, "documents"))
 
 
 # --------------------- label-indexing + n-gram stage twins (M6, M3)
@@ -1102,20 +1057,24 @@ def tfidf_pipeline_features(
     text_col: str = "text",
     stopwords: tuple[str, ...] = _EN_STOPWORDS,
 ) -> DataFrame:
-    """PRODUCTION M1->M5 featurizer (the ``bm25_search`` pattern — the
-    declared ``ml_tfidf_pipeline_twin`` fixes min_df=2/top-3 on the
-    documents table for the oracle): regex-tokenize (lowercase, \\W+),
-    remove ``stopwords`` (defaults to MLlib's frozen English list),
-    build the CountVectorizer-style vocabulary under the ``min_df`` cut,
-    IDF = ln((N+1)/(df+1)) rounded to 6dp, and emit each document's
-    ``top_k`` features by tf*idf (ties to the alphabetically first
-    term). Returns (id_col, feat_rank, term, tf, df, idf, tfidf).
+    """PRODUCTION M1->M5 featurizer (``ml_tfidf_pipeline_twin`` is this
+    call on the documents table at the defaults): RegexTokenizer
+    (lowercase, \\W+) -> StopWordsRemover (``stopwords``, defaulting to
+    MLlib's frozen English list) -> CountVectorizer-style vocabulary
+    under the ``min_df`` cut -> MLlib's IDF ln((N+1)/(df+1)) -> each
+    document's ``top_k`` features by tf*idf (ties to the alphabetically
+    first term). Returns (id_col, feat_rank, term, tf, df, idf, tfidf).
+    idf is rounded to 6dp before the product (libm independence), so
+    tfidf = bigint tf × the same rounded double in Spark and DuckDB, and
+    products and rank order are bit-identical.
 
-    Same plan shape as the twin: token-keyed partial aggs build the
-    domain-bounded idf table, which BROADCASTS to the (doc, term) tf
-    stream; top_k is a doc-keyed WindowGroupLimit. Validated entries
-    (min_df >= 1, top_k >= 1) — a silent 0 would emit an empty
-    vocabulary or no features instead of failing."""
+    Scale shape: one explode -> token-keyed partial aggs build the
+    vocabulary (the min_df cut keeps it domain-bounded); the idf table
+    BROADCASTS to the (doc, term) tf stream, so the corpus-sized side
+    never reshuffles; top_k is a doc-keyed WindowGroupLimit. No collect,
+    no driver-side vocabulary. Validated entries (min_df >= 1,
+    top_k >= 1) — a silent 0 would emit an empty vocabulary or no
+    features instead of failing."""
     if min_df < 1 or top_k < 1:
         raise ValueError(
             f"tfidf_pipeline_features: need min_df >= 1 and top_k >= 1, "

@@ -325,7 +325,7 @@ def _lsh_candidate_pairs(bands: DataFrame, max_bucket: int = MAX_BUCKET) -> Data
     """(doc_a < doc_b) candidate pairs from a band frame — THE banding
     configuration: bucket on (band_id, band_hash), keep bucket sizes in
     [2, MAX_BUCKET], expand pairs in-bucket (no self-join; signatures
-    are computed once). Shared by dedup_minhash_lsh (production dedup)
+    are computed once). Shared by neardup_pairs (production dedup)
     and dedup_lsh_candidate_recall (its calibration), so the audited
     pipeline and the audited-against pipeline cannot drift apart."""
     buckets = (
@@ -365,39 +365,11 @@ def _lsh_candidate_pairs(bands: DataFrame, max_bucket: int = MAX_BUCKET) -> Data
     """,
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs: shingle→minhash→band→bucket-group→exact-Jaccard.
-
-    Candidate generation is a GROUP-BY over (band_id, band_hash) with
-    in-bucket pair expansion — not a self-join. A self-join of the band
-    frame would make Catalyst compute the whole minhash pipeline twice
-    (once per side); grouping computes signatures exactly once and emits
-    k·(k-1)/2 pairs per bucket locally. Oversized buckets (boilerplate
-    collisions) are dropped entirely under MAX_BUCKET — the same cap the
-    oracle applies — so pair counts stay ~linear in corpus size.
-
-    Exact Jaccard over the shingle sets then verifies candidates. Both
-    engines compute the same integer set sizes, so the double division and
-    threshold agree exactly.
-    """
-    d = load(spark, sf_dir, "documents")
-    shingled = (
-        d.select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr().alias("shingles"))
-    )
-    cand = _lsh_candidate_pairs(_bands(_minhash_signature(d)))
-
-    ta = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    tb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .withColumn("jaccard_raw", jac)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("jaccard_raw", 6).alias("jaccard"))
+    """Near-dup pairs: ``neardup_pairs`` over the documents table at its
+    defaults (trigram shingles, N_HASHES hashes in N_BANDS bands,
+    MAX_BUCKET cap, JACCARD_THRESHOLD), jaccard rounded to 6dp."""
+    return neardup_pairs(load(spark, sf_dir, "documents")).withColumn(
+        "jaccard", F.round("jaccard", 6)
     )
 
 
@@ -2092,6 +2064,112 @@ def lsh_collision_probability(jaccard: float, bands: int, rows: int) -> float:
     return 1.0 - (1.0 - jaccard**rows) ** bands
 
 
+def neardup_pairs(
+    docs: DataFrame,
+    threshold: float = JACCARD_THRESHOLD,
+    num_hashes: int = N_HASHES,
+    bands: int = N_BANDS,
+    *,
+    max_bucket: int = MAX_BUCKET,
+    shingle_k: int = 3,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """PRODUCTION MinHash-LSH near-duplicate pairs: shingle → minhash →
+    band → bucket → exact-Jaccard verify over ANY (id, text) frame with
+    caller-chosen similarity threshold and banding (``dedup_minhash_lsh``
+    is this call on the documents table at the defaults, with jaccard
+    rounded to 6dp). Returns (doc_a, doc_b, jaccard): every candidate
+    pair with doc_a < doc_b (ids of ``id_col``) whose exact Jaccard over
+    the ``shingle_k``-token shingle sets is ≥ ``threshold``, jaccard
+    unrounded. Raises ValueError unless 0 < threshold < 1, num_hashes
+    and bands are ≥ 1 with bands dividing num_hashes, max_bucket ≥ 2
+    and shingle_k ≥ 1.
+
+    Parameter guidance: banding theory puts the S-curve midpoint at
+    (1/bands)^(rows/band) — see ``lsh_collision_probability`` and the
+    corpus-priced ``dedup_banding_sweep``. Candidates BELOW the curve are
+    recovered only probabilistically (LSH recall), but every candidate is
+    exact-Jaccard-verified, so precision is exact at any banding.
+
+    Scale shape: ONE shingle+signature pass (repartitioned before the
+    ~50× shingle/hash amplification, localCheckpoint'd) feeds banding
+    AND verification, so the corpus text is tokenized once.
+    Candidates come from an in-bucket group-by expansion
+    (``_lsh_candidate_pairs``), never a band self-join, which would
+    re-plan the minhash pipeline per side; oversized boilerplate buckets
+    are dropped under ``max_bucket``, so pair counts stay ~linear in
+    corpus size. Both engines compute the same integer set sizes, so the
+    double division and the threshold agree exactly."""
+    if not (0.0 < threshold < 1.0):
+        raise ValueError(f"neardup_pairs: need 0 < threshold < 1, got {threshold}")
+    if num_hashes < 1 or bands < 1:
+        raise ValueError(
+            f"neardup_pairs: need num_hashes >= 1 and bands >= 1, got ({num_hashes}, {bands})"
+        )
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"neardup_pairs: bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
+    if max_bucket < 2:
+        raise ValueError(f"neardup_pairs: need max_bucket >= 2, got {max_bucket}")
+    if shingle_k < 1:
+        raise ValueError(f"neardup_pairs: need shingle_k >= 1, got {shingle_k}")
+    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    bsig = _shingle_sig(d, shingle_k, num_hashes, bands).localCheckpoint(eager=False)
+    cand = _sig_candidate_pairs(bsig, bands, max_bucket)
+    return _verified_pairs(bsig.select("doc_id", "shingles"), cand, threshold)
+
+
+def _shingle_sig(d: DataFrame, shingle_k: int, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, shingles, b0..b{bands-1}) for the non-empty docs of a
+    (doc_id, text) frame: ``_gate_sig_cols`` over the shingle sets,
+    repartitioned before the ~50× shingle/hash amplification exactly
+    like _minhash_signature. Its band hashes are bit-identical to
+    _minhash_signature+_bands', so candidate pairs equal the explode
+    form's."""
+    return _gate_sig_cols(
+        d.repartition(_fanout_partitions(d), "doc_id")
+        .select("doc_id", _raw_tokens_expr().alias("tokens"))
+        .filter(F.size("tokens") >= 1)
+        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles")),
+        num_hashes=num_hashes,
+        bands=bands,
+    )
+
+
+def _sig_candidate_pairs(bsig: DataFrame, bands: int, max_bucket: int) -> DataFrame:
+    """(doc_a < doc_b) candidate pairs from a ``_gate_sig_cols`` frame's
+    b0..b{bands-1} band hashes, bucketed by ``_lsh_candidate_pairs``."""
+    band_frames = [
+        bsig.select(
+            "doc_id", F.lit(b).alias("band_id"), F.col(f"b{b}").alias("band_hash")
+        )
+        for b in range(bands)
+    ]
+    banded = band_frames[0]
+    for extra in band_frames[1:]:
+        banded = banded.unionByName(extra)
+    return _lsh_candidate_pairs(banded, max_bucket=max_bucket)
+
+
+def _verified_pairs(shingled: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard): the ``cand`` pairs whose exact Jaccard
+    over ``shingled``'s (doc_id, shingles) sets is ≥ ``threshold``."""
+    ta = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
+    tb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return (
+        cand.join(ta, "doc_a")
+        .join(tb, "doc_b")
+        .withColumn("jaccard", jac)
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
 def neardup_dedup(
     docs: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
@@ -2103,15 +2181,12 @@ def neardup_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """PRODUCTION MinHash-LSH near-duplicate dedup (the ``bm25_search``/
-    ``mmr_rerank`` pattern applied to the most-run LLM-pipeline pass): run
-    the full shingle → minhash → band → bucket-join → exact-Jaccard-verify
-    → connected-components pipeline of the declared ``dedup_minhash_lsh``
-    + ``dedup_connected_components`` over ANY (id, text) frame with
-    caller-chosen similarity threshold and banding. At the defaults the
-    candidate/verify stages are bit-identical to the registered
-    fixed-workload queries (pinned by tests/test_r10_neardup.py against a
-    pure-Python union-find over dedup_minhash_lsh's own pairs).
+    """PRODUCTION MinHash-LSH near-duplicate dedup: connected components
+    over ``neardup_pairs`` (same parameters and argument checks), the
+    pipeline of the declared ``dedup_minhash_lsh`` +
+    ``dedup_connected_components`` over ANY (id, text) frame.
+    tests/test_r10_neardup.py pins its clusters against a pure-Python
+    union-find over dedup_minhash_lsh's pairs.
 
     Returns one row per input doc: (id_col, cluster_id, keep) — cluster_id
     is the minimum member id of the doc's near-dup cluster (ids compare
@@ -2120,74 +2195,24 @@ def neardup_dedup(
     with no near-dup above the threshold are their own singleton cluster
     with keep=true, so ``filter("keep")`` is the deduplicated corpus.
 
-    Parameter guidance: banding theory puts the S-curve midpoint at
-    (1/bands)^(rows/band) — see ``lsh_collision_probability`` and the
-    corpus-priced ``dedup_banding_sweep``. Candidates BELOW the curve are
-    recovered only probabilistically (LSH recall), but every candidate is
-    exact-Jaccard-verified, so precision is exact at any banding.
-
-    Scale shape — every stage is the audited one from the declared
-    queries: signatures are one explode + one partial-agg groupBy
-    (repartitioned before the ~50× compute amplification), candidates come
-    from an in-bucket group-by expansion (never a band self-join — that
-    would replan the minhash pipeline per side) with oversized boilerplate
-    buckets dropped under ``max_bucket`` so pair counts stay ~linear in
-    corpus size, Jaccard verification touches candidate pairs only, and
-    the label-propagation loop runs on the near-dup SUBGRAPH (near-dup
-    components are shallow, so a handful of rounds; edges/labels
-    localCheckpoint'd per round to keep lineage flat, with only a scalar
-    changed-count collected per round). Singletons never enter the loop
-    and rejoin at the end via one left join against the input ids."""
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"neardup_dedup: need 0 < threshold < 1, got {threshold}")
-    if num_hashes < 1 or bands < 1:
-        raise ValueError(
-            f"neardup_dedup: need num_hashes >= 1 and bands >= 1, got ({num_hashes}, {bands})"
-        )
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"neardup_dedup: bands ({bands}) must divide num_hashes ({num_hashes})"
-        )
-    if max_bucket < 2:
-        raise ValueError(f"neardup_dedup: need max_bucket >= 2, got {max_bucket}")
-    if shingle_k < 1:
-        raise ValueError(f"neardup_dedup: need shingle_k >= 1, got {shingle_k}")
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    # ONE shingle+signature pass feeds banding AND verification (r15,
-    # guide §2.3 — compute the proxy once; the same shape
-    # curate_incremental's batch side got in r14): previously the
-    # tokenize→shingle chain ran once for the verify table and again
-    # inside _minhash_signature, and the verify table was re-planned
-    # per join side — three corpus-sized text passes for one answer.
-    # _gate_sig_cols' band hashes are pinned bit-identical to
-    # _minhash_signature+_bands' (its docstring; tests/test_r10_neardup
-    # union-find parity), so candidate pairs are unchanged. The
-    # checkpoint is batch-one-time: signatures, buckets and the verify
-    # joins all read the written-once (doc_id, shingles, b*) table.
-    bsig = _gate_sig_cols(
-        d.repartition(_fanout_partitions(d), "doc_id")
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles")),
-        num_hashes=num_hashes,
-        bands=bands,
-    ).localCheckpoint(eager=False)
-    band_frames = [
-        bsig.select(
-            "doc_id", F.lit(b).alias("band_id"), F.col(f"b{b}").alias("band_hash")
-        )
-        for b in range(bands)
-    ]
-    banded = band_frames[0]
-    for extra in band_frames[1:]:
-        banded = banded.unionByName(extra)
-    cand = _lsh_candidate_pairs(banded, max_bucket=max_bucket)
-    return _neardup_cluster(
-        d.select("doc_id"),
-        bsig.select("doc_id", "shingles"),
-        cand,
+    Scale shape: neardup_pairs', then the label-propagation loop runs on
+    the near-dup SUBGRAPH (near-dup components are shallow, so a handful
+    of rounds; edges/labels localCheckpoint'd per round to keep lineage
+    flat, with only a scalar changed-count collected per round).
+    Singletons never enter the loop and rejoin at the end via one left
+    join against the input ids."""
+    pairs = neardup_pairs(
+        docs,
         threshold,
+        num_hashes,
+        bands,
+        max_bucket=max_bucket,
+        shingle_k=shingle_k,
         id_col=id_col,
+        text_col=text_col,
+    )
+    return _neardup_components(
+        docs.select(F.col(id_col).alias("doc_id")), pairs, id_col=id_col
     )
 
 
@@ -2202,21 +2227,20 @@ def _neardup_cluster(
     """neardup_dedup's verify + cluster + keep tail over precomputed
     inputs: ``ids`` (doc_id — every input doc, shingled or not),
     ``shingled`` (doc_id, shingles), ``cand`` ((doc_a < doc_b) candidate
-    pairs). Split out in r14 so ``curate_incremental`` can reuse ONE
-    batch signature pass for both the corpus-gate probe and the
-    within-batch clustering instead of computing the md5 MinHash chain
-    twice; ``neardup_dedup`` routes through here unchanged."""
-    ta = shingled.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
-    tb = shingled.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    pairs = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .filter(jac >= threshold)
-        .select("doc_a", "doc_b")
-    )
+    pairs). ``curate_incremental`` runs it on the batch signature pass
+    its corpus-gate probe already ran, instead of computing the md5
+    MinHash chain twice."""
+    pairs = _verified_pairs(shingled, cand, threshold)
+    return _neardup_components(ids, pairs, id_col=id_col)
+
+
+def _neardup_components(
+    ids: DataFrame, pairs: DataFrame, *, id_col: str = "doc_id"
+) -> DataFrame:
+    """neardup_dedup's cluster + keep tail: min-label connected
+    components over the verified (doc_a, doc_b) ``pairs``, one
+    (id_col, cluster_id, keep) row per ``ids`` doc_id."""
+    pairs = pairs.select("doc_a", "doc_b")
 
     # Connected components by min-label propagation over the verified
     # pairs — the declared dedup_connected_components loop, generalized to
@@ -2824,14 +2848,7 @@ def curate_incremental(
         max_bucket=max_bucket,
         shingle_k=shingle_k,
     )
-    bsig = _gate_sig_cols(
-        surv_e.repartition(_fanout_partitions(surv_e), "doc_id")
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles")),
-        num_hashes=num_hashes,
-        bands=bands,
-    )
+    bsig = _shingle_sig(surv_e, shingle_k, num_hashes, bands)
     if materialize:
         bsig = bsig.localCheckpoint(eager=False)
     hit = (
@@ -2839,22 +2856,10 @@ def curate_incremental(
         .filter(~F.col("admit"))
         .select("doc_id")
     )
-    band_frames = [
-        bsig.select(
-            "doc_id",
-            F.lit(b).alias("band_id"),
-            F.col(f"b{b}").alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    banded = band_frames[0]
-    for extra in band_frames[1:]:
-        banded = banded.unionByName(extra)
-    cand = _lsh_candidate_pairs(banded, max_bucket=max_bucket)
     clusters = _neardup_cluster(
         surv_e.select("doc_id"),
         bsig.select("doc_id", "shingles"),
-        cand,
+        _sig_candidate_pairs(bsig, bands, max_bucket),
         neardup_threshold,
     ).select("doc_id", "cluster_id", "keep")
     contam = clusters.join(hit, "doc_id").select("cluster_id").distinct()

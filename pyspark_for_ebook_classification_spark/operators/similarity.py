@@ -2079,7 +2079,7 @@ _RRF_SCALE = 1_000_000_000_000  # integer-scaled 1/(k+r): exact in both engines
 from pyspark_for_ebook_classification_spark.operators.textops import (  # noqa: E402
     BM25_CTES,
     BM25_QUERY_MOD,
-    bm25_scored,
+    _bm25_doc_topk,
 )
 
 
@@ -2210,13 +2210,7 @@ def _lex_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, neighbor_id, rank) — the BM25 lexical modality's
     RRF_POOL-deep rank list (rank 1 = best), the _RRF_FUSED_CTES ``lex``
     CTE's Spark twin; shared by _rrf_fused and the r12 rrf_fuse router."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        bm25_scored(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RRF_POOL)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _bm25_doc_topk(spark, sf_dir, RRF_POOL).select("query_id", "neighbor_id", "rank")
 
 
 def _vec_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2402,7 +2396,7 @@ def sim_retrieval_stack_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r8 verdict task 6 — the sim_ivfpq_adc_topk composition discipline
     applied to the retrieval stack): the three individually-green stages
     chained as ONE declared query. Stage 1: the shared BM25 scorer
-    (operators/textops.py bm25_scored) ranks lexical candidates and the
+    (operators/textops.py _bm25_doc_topk) ranks lexical candidates and the
     exact-cosine pass ranks vector candidates, both pooled at
     {RRF_POOL}/query. Stage 2: reciprocal-rank fusion (the
     sim_rrf_hybrid_fusion integer-scaled form, via the shared _rrf_fused

@@ -416,13 +416,15 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    # exact count as a separate group-count joined back (5 rows, AQE
-    # broadcasts) — folding it into the rank select as count() OVER the
-    # whole partition would block the WindowGroupLimit pushdown, since
-    # the rn <= k filter could then no longer drop rows before the
-    # full-partition window runs.
-    n_exact = hashed.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_exact")
+    # exact count as a separate group-count joined back (5 rows) — folding
+    # it into the rank select as count() OVER the whole partition would
+    # block the WindowGroupLimit pushdown, since the rn <= k filter could
+    # then no longer drop rows before the full-partition window runs.
+    # The broadcast hint fixes the build side: both join sides are a few
+    # rows, and without it AQE builds on whichever side's stage finished
+    # first, so repeated runs alternate between two generated-code plans.
+    n_exact = F.broadcast(
+        hashed.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_exact"))
     )
     w_rank = Window.partitionBy("o_orderpriority").orderBy("h", "o_custkey")
     ranked = hashed.select(

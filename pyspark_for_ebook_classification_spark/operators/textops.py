@@ -1537,133 +1537,6 @@ BM25_CTES = f"""
 """
 
 
-def _bm25_tf_stats(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(tf, stats) for BM25 from ONE corpus pass (r15; guide §2.3/§2.4,
-    the r14-carried stats-merge item). ``toks`` is (doc_id, tokens).
-
-    Before: tf, the df table, the probe side and BOTH stats broadcasts
-    each re-planned the scan→tokenize→explode→aggregate chain — five
-    corpus FileScans in text_bm25_topk's plan. Now the (doc_id, token,
-    tf, dl) table is built once and localCheckpoint'd (eager=False: the
-    first consuming action materializes it), and every consumer — df
-    counts, the query-term build, the probe, and the corpus stats —
-    reads the materialized table. At 100 TB that trades one
-    (doc, term)-sized local write for four full corpus passes, each of
-    which previously ALSO shuffled its own tf-sized aggregate.
-
-    The stats fold (the blocker that kept this a two-pass shape in r14)
-    is handled by ``explode_outer``: a zero-token document keeps one
-    (doc_id, NULL) row, so the doc-level regroup sees EVERY document —
-    n_docs counts all docs and Σdl sums the same size(tokens) values
-    the old separate corpus pass summed (dl is computed before the
-    explode, min(dl) within a group IS dl). NULL-token rows are inert
-    everywhere else: every downstream consumer reaches tf through an
-    equi-join on ``token`` (df counts are only read via such joins),
-    and NULL never equi-matches, so scores are bit-identical."""
-    tf = (
-        toks.withColumn("dl", F.size("tokens").cast("bigint"))
-        .select("doc_id", "dl", F.explode_outer("tokens").alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
-        .localCheckpoint(eager=False)
-    )
-    stats = (
-        tf.groupBy("doc_id")
-        .agg(F.min("dl").alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").cast("bigint").alias("total_tokens"),
-        )
-        # one row; both broadcast consumers (the query-term idf build and
-        # the scoring crossJoin) would otherwise each re-aggregate the
-        # full tf table — prune-divergent subtrees, so ReuseExchange
-        # cannot dedupe them.
-        .localCheckpoint(eager=False)
-    )
-    return tf, stats
-
-
-def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, neighbor_id, score) — BM25 score of every candidate doc
-    sharing at least one query term, for every query doc. Shared by
-    text_bm25_topk and sim_rrf_hybrid_fusion.
-
-    Broadcast caveat (r7 ADVICE): the query-term table qt is broadcast,
-    and the DECLARED workload derives queries from every 97th doc — so
-    the broadcast side is corpus-proportional (~N/97 × ≤8 rows, ~16
-    bytes/row ≈ N/750 bytes). That is fine to ~10 GB corpora per the
-    default 8 GB driver arithmetic, but at the 100 TB target the
-    1/97-sampled workload would exceed broadcast limits: above ~1e9
-    query-term rows, drop the F.broadcast hint and let AQE pick a
-    shuffle join (the probe side is token-keyed either way). The
-    production ``bm25_search`` entry point has a FIXED |Q| and is
-    unaffected — its broadcast never grows with the corpus.
-
-    Cross-engine determinism: tf/df/dl are integers; the one libm call
-    (ln in idf) follows the text_tfidf_vocab precedent; per-term
-    contributions are identical doubles in both engines (identical
-    literal constants and parenthesization), and the per-pair sum runs
-    through DECIMAL(28,6) (functions/numeric.py discipline) so partial-
-    aggregation order can't move the result.
-
-    Checkpoint placement (r15, revising the r7 non-decision): the r7
-    A/B rejected checkpointing the per-doc token ARRAYS — corpus-sized,
-    saving only a cheap re-tokenize. What IS checkpointed now is the
-    AGGREGATED (doc, token, tf, dl) table via _bm25_tf_stats: that cut
-    point removes four full scan→tokenize→explode→aggregate corpus
-    passes (five FileScans → one in the declared plan), each of which
-    also shuffled its own tf-sized aggregate, for one (doc, term)-sized
-    local write — a strictly better trade than the r7 candidate, and
-    the corpus stats fold over the same table instead of their own
-    corpus pass (the r14-carried stats-merge item)."""
-    d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens().alias("tokens"))
-    # dl rides THROUGH the tf aggregation (min over the per-doc constant)
-    # instead of a separate corpus branch joined back on doc_id — r14,
-    # guide §2.4: removes one corpus pass and one doc_id-keyed join from
-    # every BM25 consumer for +8 bytes per (doc, term) shuffle row.
-    # Values identical: min(dl) within a (doc_id, token) group IS dl.
-    # r15: tf is built once and checkpointed, and the corpus stats fold
-    # over it (explode_outer keeps zero-token docs) — see _bm25_tf_stats.
-    tf, stats = _bm25_tf_stats(toks)
-    dfr = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    w_q = Window.partitionBy("query_id").orderBy(F.asc("df"), F.asc("token"))
-    w_cum = w_q.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    qt = (
-        tf.filter(F.col("doc_id") % BM25_QUERY_MOD == 0)
-        .select(F.col("doc_id").alias("query_id"), "token")
-        .join(dfr.filter(F.col("df") >= 2), "token")
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .withColumn(
-            "idf",
-            F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0),
-        )
-        .withColumn("rn", F.row_number().over(w_q))
-        .withColumn("cum_df", F.sum("df").over(w_cum))
-        .filter(
-            (F.col("rn") <= BM25_TERMS)
-            & ((F.col("rn") == 1) | (F.col("cum_df") <= F.col("n_docs")))
-        )
-        .select("query_id", "token", "idf")
-    )
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs")
-    contrib = F.col("idf") * (
-        (F.col("tf") * F.lit(2.2))
-        / (
-            F.col("tf")
-            + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / avgdl))
-        )
-    )
-    return (
-        tf.join(F.broadcast(qt), "token")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", F.col("doc_id").alias("neighbor_id"), contrib.alias("c"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("c").cast("decimal(28,6)")).cast("double").alias("score"))
-    )
-
-
 @query(
     "text_bm25_topk",
     survey_ref="L3,L4,L6,W4",
@@ -1682,56 +1555,64 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical ranked retrieval — the search-side operator the corpus
-    tooling was missing (TF-IDF here is a vocabulary STATISTICS pass;
-    this SCORES queries against documents). Okapi BM25 with the standard
-    k1=1.2, b=0.75: score(q,d) = Σ_t idf(t)·tf·(k1+1)/(tf + k1·(1−b+
-    b·|d|/avgdl)), idf = ln(1+(N−df+½)/(df+½)). Query workload is
-    self-contained and deterministic: every 97th document queries the
-    corpus with up to 8 of its RAREST informative terms (df ≥ 2,
-    df-ascending — rare terms carry the retrieval signal) under a
-    per-query POSTING BUDGET: terms are admitted while the running
-    Σdf of admitted terms stays ≤ n_docs, and the single rarest term
-    is always admitted. The budget is the corpus-adaptive replacement
-    for r7's hard df·10 ≤ n_docs stopword ceiling, which was VACUOUS
-    on the driver corpus (31-token vocabulary, one term under the
-    ceiling, 0 result rows at sf0.01 AND sf0.1 — r7 verdict item 1):
-    a fixed ceiling assumes a Zipfian vocabulary, and this corpus has
-    none. The budget keeps the bounded-expansion guarantee in a shape
-    that degrades gracefully — a query's candidate probes total
-    ≤ n_docs + df(rarest) posting entries (~one corpus pass worst
-    case, vs 8 passes ungated), a degenerate all-stopword document
-    probes exactly ONE list instead of eight, and on a realistic
-    Zipfian vocabulary rare terms have tiny df so the budget admits
-    all 8 — converging to the classic rarest-8 query. Every query doc
-    with ≥1 repeated term returns results; top-5 per query.
+    """Okapi BM25 ranked retrieval (k1=1.2, b=0.75) on a workload the
+    oracle can replay: every BM25_QUERY_MOD-th document queries the
+    corpus, top BM25_TOPK other documents each (``_bm25_doc_topk``).
 
-    Scale shape: the query-term table is ~corpus/97 × ≤8 rows →
-    BROADCAST to the token-keyed tf table (corpus-sized side never
-    shuffles; one codegen'd probe stage), then one partial-aggregated
-    (query,doc) groupBy over candidates that share ≥1 admitted term —
-    candidate count is budget-bounded per query, not corpus-sized.
-    The per-query top-5 is a WindowGroupLimit. At 100 TB the only
-    corpus-sized traffic is the tf build (one explode + one combine),
-    shared with text_tfidf_vocab's statistics pass.
+    Each query takes up to BM25_TERMS of its RAREST informative terms
+    (df ≥ 2, df-ascending — rare terms carry the retrieval signal) under
+    a per-query POSTING BUDGET: terms are admitted while the running Σdf
+    of admitted terms stays ≤ n_docs, and the single rarest term is
+    always admitted. A fixed df ceiling (df·10 ≤ n_docs) was vacuous on
+    the driver corpus (31-token vocabulary, 0 result rows at sf0.01 and
+    sf0.1): it assumes a Zipfian vocabulary, and this corpus has none.
+    The budget bounds a query's probes at ≤ n_docs + df(rarest) posting
+    entries, a degenerate all-stopword document probes ONE list, and on
+    a Zipfian vocabulary it admits all 8 terms.
 
-    SCALING note (re-measured honestly after the r7 vacuity fix —
-    the ceiling's committed "2.57→1.14 s" was the workload being
-    emptied, not optimized): the declared workload's |Q| grows with
-    the corpus (1/97 sample) AND each query's budget grows with
-    n_docs, so the DECLARED query is ~quadratic by construction on
-    this non-Zipfian corpus — the price of a self-contained oracle
-    workload. A real deployment's query set does not grow with the
-    corpus: with |Q| fixed, cost is one tf build + |Q| budget-bounded
-    probes — linear."""
-    scored = bm25_scored(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
+    Scale: |Q| grows with the corpus (1/97 sample) and each query's
+    budget with n_docs, so this declared workload is ~quadratic on the
+    non-Zipfian corpus — the price of a self-contained oracle workload.
+    Its query-term table (~N/97 × ≤ 8 rows, ~N/750 bytes) is what
+    ``bm25_query`` broadcasts, fine to ~10 GB corpora on an 8 GB
+    driver. A real query set does not grow with the corpus
+    (``bm25_search``)."""
+    return _bm25_doc_topk(spark, sf_dir, BM25_TOPK)
+
+
+def _bm25_doc_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(query_id, neighbor_id, bm25, rank): ``bm25_query`` over the
+    documents table for the declared corpus-derived queries (see
+    text_bm25_topk), top-``k`` documents other than the query's own.
+    Shared by text_bm25_topk and the RRF lexical pool (_lex_ranked).
+
+    The query-term table reads the index's tf, df and stats, so the
+    corpus is tokenized once. A query document holds all its own terms:
+    it is either in its own top k+1 or outscored by k others, so the
+    query ranks k+1, drops the query's own row and renumbers."""
+    index = bm25_index(load(spark, sf_dir, "documents"))
+    w_q = Window.partitionBy("query").orderBy(F.asc("df"), F.asc("token"))
+    w_cum = w_q.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    qt = (
+        index.tf.filter(F.col("doc_id") % BM25_QUERY_MOD == 0)
+        .select(F.col("doc_id").alias("query"), "token")
+        .join(index.df.filter(F.col("df") >= 2), "token")
+        .crossJoin(F.broadcast(index.stats.select("n_docs")))
+        .withColumn("rn", F.row_number().over(w_q))
+        .withColumn("cum_df", F.sum("df").over(w_cum))
+        .filter(
+            (F.col("rn") <= BM25_TERMS)
+            & ((F.col("rn") == 1) | (F.col("cum_df") <= F.col("n_docs")))
+        )
+        .select("query", "token")
     )
+    w = Window.partitionBy("query_id").orderBy("rank")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_TOPK)
-        .select("query_id", "neighbor_id", F.round("score", 4).alias("bm25"), "rank")
+        bm25_query(index, qt, k=k + 1, id_col="neighbor_id")
+        .withColumnRenamed("query", "query_id")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -1755,12 +1636,28 @@ _BM25_INDEX_COLS = {
 
 def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> BM25Index:
     """Build step of ``bm25_search``: the corpus tf table (with dl), the
-    one-row stats and the df table, all from ONE corpus pass
-    (_bm25_tf_stats). Tokens are the non-empty pieces of a split on
-    single spaces. The cut points are lazy (``localCheckpoint(eager=
-    False)``), so a one-shot index+query runs as one plan; the first
-    action that reads the index materializes it, and every later query
-    reads the materialized tables.
+    one-row stats and the df table, all from ONE corpus pass. Tokens are
+    the non-empty pieces of a split on single spaces.
+
+    The (doc_id, token, tf, dl) table is built once and every consumer —
+    df counts, a query-term build, the probe and the corpus stats —
+    reads it; without the cut each would re-plan the
+    scan→tokenize→explode→aggregate chain and shuffle its own tf-sized
+    aggregate. dl rides through the tf aggregation (min over the per-doc
+    constant) instead of a doc_id-keyed join back.
+    The stats fold over the same table: ``explode_outer`` keeps one
+    (doc_id, NULL) row per zero-token document, so n_docs counts every
+    document and Σdl sums every size(tokens); NULL-token rows are inert
+    elsewhere, since every consumer reaches tf through an equi-join on
+    ``token``. The one-row stats are cut too, so their two broadcast
+    consumers (idf and the scoring crossJoin) do not each re-aggregate
+    tf. At 100 TB that trades one (doc, term)-sized local write for four
+    corpus passes.
+
+    The cut points are lazy (``localCheckpoint(eager=False)``), so a
+    one-shot index+query runs as one plan; the first action that reads
+    the index materializes it, and every later query reads the
+    materialized tables.
 
     Reuse: ``bm25_search`` keeps the index of a PERSISTED ``docs``
     (``serving.built_for``) for as long as the same Spark cache entry
@@ -1768,18 +1665,33 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
     re-cache it builds a fresh one, and an unpersisted ``docs`` is never
     memoized. Call bm25_index directly to hold an index yourself."""
     require_columns("bm25_index", "docs", docs, (id_col, text_col))
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("tokens"),
+    tf = (
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("tokens"),
+        )
+        .withColumn("dl", F.size("tokens").cast("bigint"))
+        .select("doc_id", "dl", F.explode_outer("tokens").alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"), F.min("dl").alias("dl"))
+        .localCheckpoint(eager=False)
     )
-    tf, stats = _bm25_tf_stats(toks)
+    stats = (
+        tf.groupBy("doc_id")
+        .agg(F.min("dl").alias("dl"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("dl").cast("bigint").alias("total_tokens"),
+        )
+        .localCheckpoint(eager=False)
+    )
     dfr = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(eager=False)
     return BM25Index(tf, stats, dfr)
 
 
 def bm25_query(
     index: BM25Index,
-    queries: list[str],
+    queries: list[str] | DataFrame,
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
@@ -1787,20 +1699,33 @@ def bm25_query(
 ) -> DataFrame:
     """Score step of ``bm25_search``: rank the indexed corpus against
     ``queries`` and return (query, <id_col>, bm25, rank), top-``k`` docs
-    per query string. Reads only the query strings and ``index``
+    per query. ``queries`` is a list of query strings (each scored by
+    its distinct space-separated terms) or a DataFrame of (query, token)
+    rows, one per distinct term of a query; that ``query`` column may
+    have any type. Reads only the queries and ``index``
     (``bm25_index``'s), so one index serves any number of queries:
     ``bm25_search`` passes the index it keeps for a persisted corpus
     until that corpus's cache entry changes (see bm25_index). Raises
-    ValueError when ``queries`` is not a list of strings or the index
-    lacks its expected columns."""
-    if isinstance(queries, str) or not all(isinstance(q, str) for q in queries):
+    ValueError when ``queries`` is neither a list of strings nor a frame
+    with those columns, or the index lacks its expected columns.
+
+    Score: Σ over matched terms of idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/
+    avgdl)), idf = ln(1+(N−df+½)/(df+½)). tf/df/dl are integers, the
+    one libm call (ln) follows the text_tfidf_vocab precedent, and the
+    per-(query, doc) sum runs through DECIMAL(28,6) (functions/numeric.py
+    discipline) so partial-aggregation order cannot move the result."""
+    if isinstance(queries, DataFrame):
+        require_columns("bm25_query", "queries", queries, ("query", "token"))
+        qterms = queries.select("query", "token")
+    elif isinstance(queries, str) or not all(isinstance(q, str) for q in queries):
         raise ValueError(f"bm25_query: queries must be a list of strings, got {queries!r}")
+    else:
+        qterms = index.tf.sparkSession.createDataFrame(
+            [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
+            "query string, token string",
+        )
     for name, cols in _BM25_INDEX_COLS.items():
         require_columns("bm25_query", f"index.{name}", getattr(index, name), cols)
-    qterms = index.tf.sparkSession.createDataFrame(
-        [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
-        "query string, token string",
-    )
     qt = (
         qterms.join(index.df, "token")
         .crossJoin(F.broadcast(index.stats.select("n_docs")))
@@ -2074,63 +1999,11 @@ def _bpe_merge_with(
     oracle=_bpe_oracle(),
 )
 def text_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The iterative half of BPE tokenizer training that
-    text_bpe_pair_stats only counts one round of: Sennrich et al. 2016
-    byte-pair encoding run for a fixed {BPE_ROUNDS} merges, emitting
-    the merge table — (round, merged pair, frequency) plus the
-    vocabulary-size and stream-length trajectory after each merge. The
-    argmax pair is deterministic (count DESC, pair ASC) and the
-    greedy non-overlapping merge is the textbook scanner, re-expressed
-    as window algebra (see _bpe_merge_round) so an unrolled DuckDB
-    oracle replays the whole loop bit-for-bit — the PageRank/k-core
-    parity strategy applied to tokenizer training. A pure-Python
-    sequential-scanner third engine re-derives every round in
-    tests/test_r8_semantics.py.
-
-    Scale shape — the fastBPE observation: training never touches the
-    corpus after ONE tokenize+count pass, because merges act on the
-    frequency-weighted word-TYPE table (Zipf: types ≪ tokens; the
-    corpus-sized work is the same one-shot aggregate text_tfidf_vocab
-    makes). Each round is two window passes + one pair aggregate over
-    the positional symbol stream (≤ word-length rows per type), with
-    the 1-row argmax broadcast back — no corpus rescan, no driver-side
-    state beyond the loop counter, type-table-sized localCheckpoints
-    keeping round lineage flat. At 100 TB: ~10⁸ word types × ~10
-    positions ≈ 10⁹-row stream per round, shuffled once per round on
-    word — the standard distributed-BPE layout."""
-    d = load(spark, sf_dir, "documents")
-    wt = (
-        d.select(F.explode(_tokens()).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    chars = F.concat(F.split("word", ""), F.array(F.lit(BPE_EOW)))
-    stream = wt.select(
-        "word",
-        "cnt",
-        F.posexplode(chars).alias("p0", "s"),
-    ).select("word", "cnt", (F.col("p0") + 1).alias("p"), "s")
-    stream = stream.localCheckpoint(eager=True)
-
-    out = None
-    for k in range(1, BPE_ROUNDS + 1):
-        best, merged = _bpe_merge_round(stream)
-        stream = merged.localCheckpoint(eager=True)
-        stats = stream.agg(
-            F.count_distinct("s").cast("bigint").alias("n_symbols_after"),
-            F.count(F.lit(1)).cast("bigint").alias("n_positions_after"),
-        )
-        row = (
-            best.select(
-                F.lit(k).alias("round"),
-                F.col("l").alias("left_sym"),
-                F.col("r").alias("right_sym"),
-                F.col("c").alias("pair_count"),
-            )
-            .crossJoin(F.broadcast(stats))
-        )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("round")
+    """``bpe_train`` over the documents table at its defaults: the merge
+    table of BPE_ROUNDS greedy rounds, (round, merged pair, frequency)
+    plus the vocabulary-size and stream-length trajectory after each
+    merge. The oracle unrolls the same rounds (``_bpe_ctes``)."""
+    return bpe_train(load(spark, sf_dir, "documents"))
 
 
 # ------------------------------- CCNet reference-perplexity buckets (L4/L6)
@@ -2386,26 +2259,11 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-def bpe_train(
-    docs: DataFrame,
-    rounds: int = BPE_ROUNDS,
-    text_col: str = "text",
-    eow: str = BPE_EOW,
-) -> DataFrame:
-    """PRODUCTION BPE trainer: run ``rounds`` greedy merges over the
-    frequency-weighted word-type table of ``docs`` (the declared
-    ``text_bpe_merge_train`` fixes the corpus and {BPE_ROUNDS} rounds so
-    a DuckDB oracle can unroll it). Returns the merge table —
-    (round, left_sym, right_sym, pair_count, n_symbols_after,
-    n_positions_after) — which IS the tokenizer artifact: applying a
-    trained BPE is replaying this table's merges in order.
-
-    Same shape per round as the declared query: the corpus is tokenized
-    and counted exactly once (fastBPE's observation — merges act on
-    word TYPES, Zipf makes types ≪ tokens), then each round is two
-    window passes + one pair aggregate over the positional symbol
-    stream with the 1-row argmax broadcast back, type-table-sized
-    localCheckpoints keeping lineage flat."""
+def _bpe_stream(docs: DataFrame, text_col: str, eow: str) -> DataFrame:
+    """(word, cnt, p, s): the frequency-weighted word-type table of
+    ``docs`` as a positional symbol stream — each word type's characters
+    then ``eow``, p from 1. The one input of ``bpe_train`` and
+    ``bpe_apply``."""
     toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
     wt = (
         docs.select(F.explode(toks).alias("word"))
@@ -2413,11 +2271,41 @@ def bpe_train(
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     chars = F.concat(F.split("word", ""), F.array(F.lit(eow)))
-    stream = (
-        wt.select("word", "cnt", F.posexplode(chars).alias("p0", "s"))
-        .select("word", "cnt", (F.col("p0") + 1).alias("p"), "s")
-        .localCheckpoint(eager=True)
+    return wt.select("word", "cnt", F.posexplode(chars).alias("p0", "s")).select(
+        "word", "cnt", (F.col("p0") + 1).alias("p"), "s"
     )
+
+
+def bpe_train(
+    docs: DataFrame,
+    rounds: int = BPE_ROUNDS,
+    text_col: str = "text",
+    eow: str = BPE_EOW,
+) -> DataFrame:
+    """PRODUCTION BPE trainer: Sennrich et al. 2016 byte-pair encoding,
+    ``rounds`` greedy merges over the frequency-weighted word-type table
+    of ``docs`` (``text_bpe_merge_train`` is this call on the documents
+    table). Returns the merge table — (round, left_sym, right_sym,
+    pair_count, n_symbols_after, n_positions_after) — which IS the
+    tokenizer artifact: applying a trained BPE is replaying this table's
+    merges in order (``bpe_apply``). The argmax pair is deterministic
+    (count DESC, pair ASC) and the greedy non-overlapping merge is the
+    textbook scanner re-expressed as window algebra (see
+    _bpe_merge_round), so an unrolled DuckDB oracle replays the whole
+    loop bit-for-bit. A pure-Python sequential scanner re-derives every
+    round in tests/test_r8_semantics.py.
+
+    Scale shape — the fastBPE observation: training never touches the
+    corpus after ONE tokenize+count pass, because merges act on the
+    word-TYPE table (Zipf: types ≪ tokens). Each round is two window
+    passes + one pair aggregate over the positional symbol stream (≤
+    word-length rows per type), with the 1-row argmax broadcast back —
+    no corpus rescan, no driver-side state beyond the loop counter,
+    type-table-sized localCheckpoints keeping round lineage flat. At
+    100 TB: ~10⁸ word types × ~10 positions ≈ 10⁹-row stream per round,
+    shuffled once per round on word — the standard distributed-BPE
+    layout."""
+    stream = _bpe_stream(docs, text_col, eow).localCheckpoint(eager=True)
     out = None
     for k in range(1, rounds + 1):
         best, merged = _bpe_merge_round(stream)
@@ -2698,6 +2586,15 @@ def winnow_overlap_search(
     )
 
 
+def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``bpe_apply`` of the documents table under its own trained merges
+    (``bpe_train`` at BPE_ROUNDS, collected in round order): the encoded
+    word-type table both the encode and the decode query aggregate."""
+    d = load(spark, sf_dir, "documents")
+    merges = [(r.left_sym, r.right_sym) for r in bpe_train(d).collect()]
+    return bpe_apply(d, merges)
+
+
 @query(
     "text_bpe_encode_vocab",
     survey_ref="L6,L7,W2,A1",
@@ -2714,44 +2611,20 @@ def winnow_overlap_search(
     """,
 )
 def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ENCODE half of the BPE loop (r9 — text_bpe_merge_train emits
-    the merge TABLE; this emits what a pipeline actually budgets with:
-    the corpus token distribution under the trained tokenizer). Applying
-    a trained BPE is replaying its merges in order, and the trainer's
-    final positional stream IS the encoded corpus over word types — so
-    the query runs the same 6 merge rounds and aggregates the final
-    stream: per-symbol corpus occurrences (Σ word-count over positions)
-    and word-type spread. This is the table vocab-truncation and
-    token-count planning read (occurrences = exactly the corpus token
-    count each symbol contributes post-tokenization), and together with
-    the trainer it closes L6's train → apply loop under the hash gate.
-    All-integer output — no rounding hazards.
-
-    Scale shape: identical to the trainer (corpus tokenized and counted
-    ONCE into the Zipf-bounded word-type table; each round is two window
-    passes + one broadcast-argmax over type-sized data), plus one final
-    symbol-keyed partial agg whose output is vocabulary-bounded. The
-    third engine (tests/test_r8_semantics.py's pure-Python BPE scanner,
-    extended in test_bpe_encode_matches_scanner) re-derives every count.
-    """
-    d = load(spark, sf_dir, "documents")
-    wt = (
-        d.select(F.explode(_tokens()).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    chars = F.concat(F.split("word", ""), F.array(F.lit(BPE_EOW)))
-    stream = (
-        wt.select("word", "cnt", F.posexplode(chars).alias("p0", "s"))
-        .select("word", "cnt", (F.col("p0") + 1).alias("p"), "s")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(BPE_ROUNDS):
-        _, merged = _bpe_merge_round(stream)
-        stream = merged.localCheckpoint(eager=True)
-    return stream.groupBy(F.col("s").alias("symbol")).agg(
-        F.sum("cnt").cast("bigint").alias("occurrences"),
-        F.countDistinct("word").cast("bigint").alias("word_types"),
+    """The ENCODE half of the BPE loop: the corpus token distribution
+    under the trained tokenizer, per symbol its corpus occurrences (Σ
+    word count over positions) and word-type spread. Fixes the corpus
+    and its own BPE_ROUNDS trained merges (``_bpe_encoded``); the
+    encoding is ``bpe_apply``'s. The pure-Python scanner in
+    tests/test_r9_semantics.py re-derives every count."""
+    enc = _bpe_encoded(spark, sf_dir)
+    return (
+        enc.select("word", "cnt", F.explode("symbols").alias("symbol"))
+        .groupBy("symbol")
+        .agg(
+            F.sum("cnt").cast("bigint").alias("occurrences"),
+            F.countDistinct("word").cast("bigint").alias("word_types"),
+        )
     )
 
 
@@ -2778,58 +2651,21 @@ def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DECODE half that closes L6's tokenizer loop (r9 verdict task
-    3 — train → encode → decode → ORIGINAL): replay the 6 trained merges
-    (the encode), then decode each word type by concatenating its symbol
-    stream back in position order, and prove the round-trip identity the
-    tokenizer user actually relies on — decoded text == original word (+
-    the end-of-word marker the encoder appended). The output buckets
-    word types by encoded length: per n_symbols, the word-type count,
-    the count-weighted corpus-token mass, and how many types round-trip
-    exactly. The identity guarantee is that roundtrip_exact_types ==
-    word_types in EVERY bucket (BPE merges only ever concatenate
-    adjacent symbols, so decode is lossless by construction) — pinned as
-    an invariant by tests/test_r10_semantics.py, with the sequential
-    Python scanner as third engine re-deriving every bucket. All-integer
-    output — no rounding hazards.
-
-    Scale shape: identical to the encode half (one corpus tokenize+count
-    pass; each merge round two window passes + a broadcast argmax over
-    the Zipf-bounded word-TYPE stream), plus one per-word ordered
-    string_agg — a partial agg over the type-sized stream (array_sort of
-    ≤ word-length structs per type, never corpus-sized), then a
-    vocabulary-bounded final agg keyed by encoded length."""
-    d = load(spark, sf_dir, "documents")
-    wt = (
-        d.select(F.explode(_tokens()).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    chars = F.concat(F.split("word", ""), F.array(F.lit(BPE_EOW)))
-    stream = (
-        wt.select("word", "cnt", F.posexplode(chars).alias("p0", "s"))
-        .select("word", "cnt", (F.col("p0") + 1).alias("p"), "s")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(BPE_ROUNDS):
-        _, merged = _bpe_merge_round(stream)
-        stream = merged.localCheckpoint(eager=True)
-    dec = stream.groupBy("word", "cnt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_symbols"),
-        F.concat_ws(
-            "",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "s"))),
-                lambda x: x["s"],
-            ),
-        ).alias("decoded"),
-    )
-    return dec.groupBy("n_symbols").agg(
+    """The DECODE half that closes the train → encode → decode loop:
+    concatenate each encoded word type's symbols back in order and count,
+    per encoded length, the word types, their corpus-token mass and how
+    many round-trip exactly to the word plus the end-of-word marker.
+    Fixes the same encoding as text_bpe_encode_vocab (``_bpe_encoded``).
+    roundtrip_exact_types == word_types in every bucket, because merges
+    only concatenate adjacent symbols; tests/test_r10_semantics.py pins
+    that with the sequential Python scanner."""
+    enc = _bpe_encoded(spark, sf_dir)
+    return enc.groupBy("n_symbols").agg(
         F.count(F.lit(1)).cast("bigint").alias("word_types"),
         F.sum("cnt").cast("bigint").alias("corpus_tokens"),
         F.sum(
             F.when(
-                F.col("decoded") == F.concat(F.col("word"), F.lit(BPE_EOW)), 1
+                F.concat_ws("", "symbols") == F.concat(F.col("word"), F.lit(BPE_EOW)), 1
             ).otherwise(0)
         )
         .cast("bigint")
@@ -3133,9 +2969,10 @@ def bpe_apply(
     the end-of-word marker). Per Zipf the word-type table is tiny next
     to the corpus, so this is the join-ready form — explode ``symbols``
     against your doc-token stream for per-document token ids, or
-    aggregate ``cnt`` by symbol for the corpus token budget (at the
-    trainer's own merges that aggregate equals the declared
-    ``text_bpe_encode_vocab``, pinned by tests/test_r10_library.py).
+    aggregate ``cnt`` by symbol for the corpus token budget (the
+    declared ``text_bpe_encode_vocab`` is that aggregate at the
+    trainer's own merges, and ``text_bpe_decode_roundtrip`` decodes the
+    same table).
 
     Scale shape — the trainer's ONE tokenize+count pass, then |merges|
     window rounds over type-sized data, but — unlike the trainer, whose
@@ -3158,16 +2995,7 @@ def bpe_apply(
                 f"bpe_apply: merge {i} must be a (left, right) pair of "
                 f"non-empty strings, got {pair!r}"
             )
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-    wt = (
-        docs.select(F.explode(toks).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-    chars = F.concat(F.split("word", ""), F.array(F.lit(eow)))
-    stream = wt.select(
-        "word", "cnt", F.posexplode(chars).alias("p0", "s")
-    ).select("word", "cnt", (F.col("p0") + 1).alias("p"), "s")
+    stream = _bpe_stream(docs, text_col, eow)
     for i, (left, right) in enumerate(merges):
         stream = _bpe_merge_with(stream, (left, right))
         # Periodic lineage cut (r14 ADVICE): the lazy replay stacks ~5

@@ -14,6 +14,7 @@ from pyspark_for_ebook_classification_spark.operators.dedup import (
     N_HASHES,
     lsh_collision_probability,
     neardup_dedup,
+    neardup_pairs,
 )
 from pyspark_for_ebook_classification_spark.plans.registry import all_queries
 from pyspark_for_ebook_classification_spark.sources.io import load
@@ -142,8 +143,37 @@ def test_alternate_banding_runs(spark):
 )
 def test_parameter_validation(spark, kwargs):
     docs = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
-    with pytest.raises(ValueError):
-        neardup_dedup(docs, **kwargs)
+    for entry in (neardup_dedup, neardup_pairs):
+        with pytest.raises(ValueError):
+            entry(docs, **kwargs)
+
+
+def test_pairs_are_ordered_and_verified(spark):
+    """neardup_pairs returns each verified pair once with doc_a < doc_b
+    (ids given in descending order here) and its unrounded exact Jaccard
+    over the trigram shingle sets, never below the threshold."""
+    base = [f"tok{i}" for i in range(40)]
+    near = base[:38] + ["new0", "new1"]
+    rows = [
+        (9, " ".join(base)),
+        (8, " ".join(base)),
+        (7, " ".join(near)),
+        (6, "completely different text about nothing shared at all xyz"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id int, text string")
+
+    def shingles(text):
+        t = text.split(" ")
+        n = len(t)
+        return {" ".join(t[min(i + j, n - 1)] for j in range(3)) for i in range(max(n - 2, 1))}
+
+    sh = {i: shingles(text) for i, text in rows}
+    out = neardup_pairs(docs, threshold=0.5, bands=3).collect()
+    assert {(r.doc_a, r.doc_b) for r in out} >= {(8, 9)}
+    for r in out:
+        assert r.doc_a < r.doc_b
+        assert r.jaccard >= 0.5
+        assert r.jaccard == len(sh[r.doc_a] & sh[r.doc_b]) / len(sh[r.doc_a] | sh[r.doc_b])
 
 
 def test_fanout_partitions_falls_back_on_non_integer_conf(spark, monkeypatch):

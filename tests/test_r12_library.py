@@ -104,19 +104,6 @@ def test_gopher_router_is_non_vacuous(spark, sf_dir):
 # ----------------------------------------------------------------- tfidf
 
 
-def test_tfidf_library_defaults_match_registered_twin(spark, sf_dir):
-    from pyspark_for_ebook_classification_spark.ml.queries import (
-        tfidf_pipeline_features,
-    )
-
-    d = load(spark, sf_dir, "documents")
-    lib = {tuple(r) for r in tfidf_pipeline_features(d).collect()}
-    reg = {
-        tuple(r) for r in QUERIES["ml_tfidf_pipeline_twin"].fn(spark, sf_dir).collect()
-    }
-    assert lib == reg and len(lib) > 0
-
-
 def test_tfidf_router_respects_both_dials(spark, sf_dir):
     out = QUERIES["ml_tfidf_library_features"].fn(spark, sf_dir).collect()
     assert len(out) > 0

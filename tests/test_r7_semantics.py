@@ -231,21 +231,13 @@ def test_rrf_fuse_generalizes_the_declared_fusion(spark, sf_dir):
     from pyspark_for_ebook_classification_spark.operators.similarity import (
         RRF_POOL,
         RRF_TOPK,
+        _lex_ranked,
         _normed,
         spark_dot,
     )
-    from pyspark_for_ebook_classification_spark.operators.textops import (
-        BM25_QUERY_MOD,
-        bm25_scored,
-    )
+    from pyspark_for_ebook_classification_spark.operators.textops import BM25_QUERY_MOD
 
-    w_lex = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    lex = (
-        bm25_scored(spark, sf_dir)
-        .withColumn("rank", F.row_number().over(w_lex))
-        .filter(F.col("rank") <= RRF_POOL)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    lex = _lex_ranked(spark, sf_dir)
     e = _normed(spark, sf_dir)
     vq = e.filter(F.col("vec_id") % BM25_QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
@@ -326,7 +318,7 @@ _BM25_ROWS = [
 
 
 def test_bm25_search_counts_zero_token_docs_in_stats(spark):
-    """r15 (_bm25_tf_stats): the corpus stats now FOLD over the
+    """r15 (bm25_index): the corpus stats now FOLD over the
     checkpointed tf table instead of running their own corpus pass, with
     explode_outer keeping one NULL-token row per zero-token doc. Pin the
     semantics that made the r14 merge attempt a blocker: a corpus with
@@ -397,6 +389,41 @@ def test_bm25_search_is_index_then_query(spark):
     got = bm25_search(renamed, qs, k=2, k1=2.0, b=0.5, id_col="uri", text_col="body")
     index = bm25_index(renamed, id_col="uri", text_col="body")
     assert _rows(got) == _rows(bm25_query(index, qs, k=2, k1=2.0, b=0.5, id_col="uri"))
+
+
+def test_bm25_query_frame_matches_string_path(spark):
+    """A (query, token) frame holding each query string's distinct terms
+    scores exactly as the strings do; with integer query keys, the rows
+    differ only in the key."""
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+    )
+
+    index = bm25_index(_bm25_docs(spark))
+    qs = ["alpha gamma", "delta alpha", "zzz"]
+    terms = [(q, t) for q in qs for t in dict.fromkeys(q.split(" "))]
+    frame = spark.createDataFrame(terms, "query string, token string")
+    want = _rows(bm25_query(index, qs, k=3))
+    assert want and _rows(bm25_query(index, frame, k=3)) == want
+    keyed = spark.createDataFrame(
+        [(qs.index(q), t) for q, t in terms], "query int, token string"
+    )
+    assert _rows(bm25_query(index, keyed, k=3)) == sorted(
+        (qs.index(q), *rest) for q, *rest in want
+    )
+
+
+def test_bm25_query_frame_needs_query_and_token(spark):
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+    )
+
+    index = bm25_index(_bm25_docs(spark))
+    bad = spark.createDataFrame([(1, "alpha")], "query_id int, token string")
+    with pytest.raises(ValueError, match="queries lacks column"):
+        bm25_query(index, bad)
 
 
 def test_bm25_search_reuses_index_of_persisted_docs(spark, count_jobs):
