@@ -1120,22 +1120,17 @@ def tfidf_pipeline_features(
 
 
 class NBModel(NamedTuple):
-    """``nb_fit``'s model: three label- or vocabulary-bounded tables."""
+    """``nb_fit``'s model: one (label x vocabulary)-bounded table."""
 
-    #: (lang, token, c): per-(label, token) training counts
-    counts: DataFrame
-    #: (token): the training vocabulary
-    vocab: DataFrame
-    #: (lang, n_docs, n_train, tot, v): one row per label with its doc
-    #: count, the training doc count, its token total and the vocab size
-    labels: DataFrame
+    #: (cand_lang, token, c, tot, v, n_docs, n_train): one row per
+    #: (label, training-vocabulary token); c is the token's training count
+    #: under that label (0 when the pair never occurs), tot the label's
+    #: token total, v the vocabulary size, n_docs the label's doc count and
+    #: n_train the training doc count
+    table: DataFrame
 
 
-_NB_MODEL_COLS = {
-    "counts": ("lang", "token", "c"),
-    "vocab": ("token",),
-    "labels": ("lang", "n_docs", "n_train", "tot", "v"),
-}
+_NB_MODEL_COLS = ("cand_lang", "token", "c", "tot", "v", "n_docs", "n_train")
 
 
 def _nb_tokens(text_col: str):
@@ -1148,19 +1143,27 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     ``nb_score`` scores against. Tokens are the non-empty pieces of a
     split on single spaces.
 
+    The model is one table with a row per (label, vocabulary token),
+    every per-label statistic repeated on its rows, so a request joins
+    one table once. Labels are the non-NULL training labels; the
+    vocabulary is every training token, NULL-label docs included, and
+    NULL-label docs count toward n_train, as in the oracle.
+
     Plan shape (r15's single training pass): one checkpointed (label x
     vocab)-bounded count table feeds the vocabulary and every per-label
     statistic, and n_train folds over the per-label doc counts
-    (_with_n_train). The cut points are lazy (``localCheckpoint(eager=
-    False)``): a one-shot fit+score runs as one plan, and the first
-    action that reads the model materializes it, after which every
-    further score reads the materialized tables.
+    (_with_n_train). The cut points are ``localCheckpoint(eager=False)``:
+    no cut stores rows until the first action that reads the model, after
+    which every further score reads the stored tables. Under AQE a cut
+    does run its plan's shuffle stages when it is made, so building even
+    a one-shot fit+score frame starts those jobs.
 
     Reuse: ``nb_classify`` keeps the model of a PERSISTED ``train``
-    (``serving.built_for``) for as long as the same Spark cache entry
-    backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
-    re-cache it builds a fresh one, and an unpersisted ``train`` is never
-    memoized. Call nb_fit directly to hold a model yourself."""
+    (``serving.built_for``, which materializes it, as one partition when
+    small) for as long as the same Spark cache entry backs it; after
+    ``unpersist()``, ``spark.catalog.clearCache()`` or a re-cache it
+    builds a fresh one, and an unpersisted ``train`` is never memoized.
+    Call nb_fit directly to hold a model yourself."""
     require_columns("nb_fit", "train", train, (label_col, text_col))
     tr = train.select(F.col(label_col).alias("lang"), _nb_tokens(text_col).alias("tokens"))
     counts = (
@@ -1176,9 +1179,22 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     labels = (
         _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
         .join(per_label, "lang")
+    )
+    table = (
+        labels.crossJoin(vocab)
+        .join(counts, ["lang", "token"], "left")
+        .select(
+            F.col("lang").alias("cand_lang"),
+            "token",
+            F.coalesce(F.col("c"), F.lit(0)).alias("c"),
+            "tot",
+            "v",
+            "n_docs",
+            "n_train",
+        )
         .localCheckpoint(eager=False)
     )
-    return NBModel(counts, vocab, labels)
+    return NBModel(table)
 
 
 def nb_score(
@@ -1204,33 +1220,33 @@ def nb_score(
     decimals pre-sum and the per-(doc, label) sum accumulated in
     DECIMAL(28,6) so partial-aggregation order cannot move the result;
     argmax ties to the alphabetically first label. Test tokens outside
-    the train vocab are dropped; a doc with none left emits no row."""
+    the train vocab are dropped; a doc with none left emits no row.
+
+    Plan: the request is hash-partitioned by doc id once, and the model
+    table is broadcast into it, so the per-(doc, token) tf aggregate, the
+    per-(doc, label) score aggregate and the per-doc argmax window all
+    run behind that one exchange."""
     if alpha <= 0:
         raise ValueError(f"nb_score: need alpha > 0, got {alpha}")
-    for name, cols in _NB_MODEL_COLS.items():
-        require_columns("nb_score", f"model.{name}", getattr(model, name), cols)
+    require_columns("nb_score", "model.table", model.table, _NB_MODEL_COLS)
     require_columns("nb_score", "test", test, (id_col, text_col))
     te_tok = (
-        test.select(F.col(id_col).alias("doc_id"), F.explode(_nb_tokens(text_col)).alias("token"))
-        .join(model.vocab, "token")
+        test.select(F.col(id_col).alias("doc_id"), _nb_tokens(text_col).alias("tokens"))
+        .repartition("doc_id")
+        .select("doc_id", F.explode("tokens").alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     log_lik = F.round(
         F.log(
-            (F.coalesce(F.col("c"), F.lit(0)) + F.lit(float(alpha)))
+            (F.col("c") + F.lit(float(alpha)))
             / (F.col("tot") + F.lit(float(alpha)) * F.col("v"))
         ),
         6,
     )
     log_prior = F.round(F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6)
     scored = (
-        te_tok.crossJoin(F.broadcast(model.labels.withColumnRenamed("lang", "cand_lang")))
-        .join(
-            model.counts.withColumnRenamed("lang", "cand_lang"),
-            ["cand_lang", "token"],
-            "left",
-        )
+        te_tok.join(F.broadcast(model.table), "token")
         .groupBy("doc_id", "cand_lang")
         .agg(
             (
@@ -1274,11 +1290,11 @@ def nb_classify(
     Spark cache entry backs ``train`` (see nb_fit and serving.built_for);
     an unpersisted ``train`` is fitted in the same plan as the scoring.
 
-    Scale shape: the model is two vocabulary-sized tables (per-label
-    token counts, the vocabulary) plus one row per label, the last
-    BROADCAST; scoring is one map-side join over the test token stream
-    followed by a (doc, label)-keyed partial agg; training is one
-    token-keyed combine. No corpus self-join anywhere. MLlib's
+    Scale shape: the model is one (label x vocabulary)-sized table,
+    BROADCAST; scoring hash-partitions the test docs by id once, then
+    joins map-side and runs the (doc, label)-keyed aggregate and the
+    per-doc argmax behind that exchange; training is one token-keyed
+    combine. No corpus self-join anywhere. MLlib's
     NaiveBayes (ml/pipeline.py) stays the production surface when
     HashingTF features are wanted; this is the engine-native form whose
     every number a DuckDB oracle can replay."""

@@ -1619,29 +1619,27 @@ def _bm25_doc_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 class BM25Index(NamedTuple):
     """``bm25_index``'s corpus-side state."""
 
-    #: (doc_id, token, tf, dl): term counts with each doc's length
+    #: (doc_id, token, tf, dl_ratio, idf): term counts with each doc's
+    #: length over the corpus mean length (dl/avgdl) and the term's idf
     tf: DataFrame
     #: one row (n_docs, total_tokens)
     stats: DataFrame
-    #: (token, df): document frequency of each corpus token
+    #: (token, df, idf): document frequency and BM25 idf of each corpus token
     df: DataFrame
 
 
-_BM25_INDEX_COLS = {
-    "tf": ("doc_id", "token", "tf", "dl"),
-    "stats": ("n_docs", "total_tokens"),
-    "df": ("token", "df"),
-}
+#: the columns of ``BM25Index.tf``, the one table ``bm25_query`` reads
+_BM25_TF_COLS = ("doc_id", "token", "tf", "dl_ratio", "idf")
 
 
 def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> BM25Index:
-    """Build step of ``bm25_search``: the corpus tf table (with dl), the
-    one-row stats and the df table, all from ONE corpus pass. Tokens are
-    the non-empty pieces of a split on single spaces.
+    """Build step of ``bm25_search``: the corpus tf table (with dl/avgdl
+    and idf), the one-row stats and the df table (with idf), all from ONE
+    corpus pass. Tokens are the non-empty pieces of a split on single spaces.
 
-    The (doc_id, token, tf, dl) table is built once and every consumer —
-    df counts, a query-term build, the probe and the corpus stats —
-    reads it; without the cut each would re-plan the
+    The (doc_id, token, tf, dl) count table is built once and every
+    consumer — df counts, a query-term build, the probe and the corpus
+    stats — reads it; without the cut each would re-plan the
     scan→tokenize→explode→aggregate chain and shuffle its own tf-sized
     aggregate. dl rides through the tf aggregation (min over the per-doc
     constant) instead of a doc_id-keyed join back.
@@ -1650,22 +1648,26 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
     document and Σdl sums every size(tokens); NULL-token rows are inert
     elsewhere, since every consumer reaches tf through an equi-join on
     ``token``. The one-row stats are cut too, so their two broadcast
-    consumers (idf and the scoring crossJoin) do not each re-aggregate
-    tf. At 100 TB that trades one (doc, term)-sized local write for four
-    corpus passes.
+    consumers (idf into df, dl/avgdl into tf) do not each re-aggregate
+    the counts. Every corpus-side factor is folded in here, with the
+    expressions ``bm25_query``'s formula names: df's idf is broadcast
+    into tf (the vocabulary-sized side), so a query reads tf alone and
+    broadcasts only its own terms.
 
-    The cut points are lazy (``localCheckpoint(eager=False)``), so a
-    one-shot index+query runs as one plan; the first action that reads
-    the index materializes it, and every later query reads the
-    materialized tables.
+    The cut points are ``localCheckpoint(eager=False)``: no cut stores
+    rows until the first action that reads the index, and every later
+    query reads the stored tables. Under AQE a cut does run its plan's
+    shuffle stages when it is made, so building even a one-shot
+    index+query frame starts those jobs.
 
     Reuse: ``bm25_search`` keeps the index of a PERSISTED ``docs``
-    (``serving.built_for``) for as long as the same Spark cache entry
+    (``serving.built_for``, which materializes each table, as one
+    partition when small) for as long as the same Spark cache entry
     backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
     re-cache it builds a fresh one, and an unpersisted ``docs`` is never
     memoized. Call bm25_index directly to hold an index yourself."""
     require_columns("bm25_index", "docs", docs, (id_col, text_col))
-    tf = (
+    counts = (
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.filter(F.split(F.col(text_col), " "), lambda t: t != "").alias("tokens"),
@@ -1677,7 +1679,7 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
         .localCheckpoint(eager=False)
     )
     stats = (
-        tf.groupBy("doc_id")
+        counts.groupBy("doc_id")
         .agg(F.min("dl").alias("dl"))
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1685,7 +1687,20 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
         )
         .localCheckpoint(eager=False)
     )
-    dfr = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(eager=False)
+    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    dfr = (
+        counts.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(F.broadcast(stats.select("n_docs")))
+        .select("token", "df", idf.alias("idf"))
+        .localCheckpoint(eager=False)
+    )
+    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs")
+    tf = (
+        counts.join(F.broadcast(dfr.select("token", "idf")), "token")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", "token", "tf", (F.col("dl") / avgdl).alias("dl_ratio"), "idf")
+    )
     return BM25Index(tf, stats, dfr)
 
 
@@ -1710,10 +1725,16 @@ def bm25_query(
     with those columns, or the index lacks its expected columns.
 
     Score: Σ over matched terms of idf·tf·(k1+1)/(tf + k1·(1−b+b·dl/
-    avgdl)), idf = ln(1+(N−df+½)/(df+½)). tf/df/dl are integers, the
-    one libm call (ln) follows the text_tfidf_vocab precedent, and the
-    per-(query, doc) sum runs through DECIMAL(28,6) (functions/numeric.py
-    discipline) so partial-aggregation order cannot move the result."""
+    avgdl)), idf = ln(1+(N−df+½)/(df+½)); idf and dl/avgdl come
+    precomputed in the index. tf/df/dl are integers, the one libm call
+    (ln) follows the text_tfidf_vocab precedent, and the per-(query,
+    doc) sum runs through DECIMAL(28,6) (functions/numeric.py
+    discipline) so partial-aggregation order cannot move the result.
+
+    Plan: the (query, token) rows broadcast into the tf probe; the
+    per-(query, doc) aggregate and the top-k window follow. Against a
+    one-partition index (a served corpus, see bm25_index) neither needs
+    an exchange."""
     if isinstance(queries, DataFrame):
         require_columns("bm25_query", "queries", queries, ("query", "token"))
         qterms = queries.select("query", "token")
@@ -1724,30 +1745,16 @@ def bm25_query(
             [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
             "query string, token string",
         )
-    for name, cols in _BM25_INDEX_COLS.items():
-        require_columns("bm25_query", f"index.{name}", getattr(index, name), cols)
-    qt = (
-        qterms.join(index.df, "token")
-        .crossJoin(F.broadcast(index.stats.select("n_docs")))
-        .select(
-            "query",
-            "token",
-            F.log(
-                (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-            ).alias("idf"),
-        )
-    )
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs")
+    require_columns("bm25_query", "index.tf", index.tf, _BM25_TF_COLS)
     contrib = F.col("idf") * (
         (F.col("tf") * F.lit(k1 + 1.0))
         / (
             F.col("tf")
-            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / avgdl))
+            + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl_ratio"))
         )
     )
     scored = (
-        index.tf.join(F.broadcast(qt), "token")
-        .crossJoin(F.broadcast(index.stats))
+        index.tf.join(F.broadcast(qterms), "token")
         .select("query", "doc_id", contrib.alias("c"))
         .groupBy("query", "doc_id")
         .agg(F.sum(F.col("c").cast("decimal(28,6)")).cast("double").alias("score"))
@@ -2276,6 +2283,33 @@ def _bpe_stream(docs: DataFrame, text_col: str, eow: str) -> DataFrame:
     )
 
 
+def _bpe_rounds(
+    docs: DataFrame, rounds: int, text_col: str, eow: str
+) -> list[tuple[DataFrame, DataFrame]]:
+    """The trainer's loop: per round, its 1-row (l, r, c) argmax pair
+    and the stream it merged into, materialized. The last stream IS
+    ``docs`` encoded under the trained merges, the stream ``bpe_apply``
+    would replay them to."""
+    stream = _bpe_stream(docs, text_col, eow).localCheckpoint(eager=True)
+    out = []
+    for _ in range(rounds):
+        best, merged = _bpe_merge_round(stream)
+        stream = merged.localCheckpoint(eager=True)
+        out.append((best, stream))
+    return out
+
+
+def _bpe_symbols(stream: DataFrame) -> DataFrame:
+    """(word, cnt, symbols, n_symbols): a positional symbol stream
+    folded back to one row per word type, symbols in position order."""
+    return stream.groupBy("word", "cnt").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("p", "s"))), lambda x: x["s"]
+        ).alias("symbols"),
+        F.count(F.lit(1)).cast("bigint").alias("n_symbols"),
+    )
+
+
 def bpe_train(
     docs: DataFrame,
     rounds: int = BPE_ROUNDS,
@@ -2305,11 +2339,8 @@ def bpe_train(
     100 TB: ~10⁸ word types × ~10 positions ≈ 10⁹-row stream per round,
     shuffled once per round on word — the standard distributed-BPE
     layout."""
-    stream = _bpe_stream(docs, text_col, eow).localCheckpoint(eager=True)
     out = None
-    for k in range(1, rounds + 1):
-        best, merged = _bpe_merge_round(stream)
-        stream = merged.localCheckpoint(eager=True)
+    for k, (best, stream) in enumerate(_bpe_rounds(docs, rounds, text_col, eow), 1):
         stats = stream.agg(
             F.count_distinct("s").cast("bigint").alias("n_symbols_after"),
             F.count(F.lit(1)).cast("bigint").alias("n_positions_after"),
@@ -2587,12 +2618,13 @@ def winnow_overlap_search(
 
 
 def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``bpe_apply`` of the documents table under its own trained merges
-    (``bpe_train`` at BPE_ROUNDS, collected in round order): the encoded
-    word-type table both the encode and the decode query aggregate."""
-    d = load(spark, sf_dir, "documents")
-    merges = [(r.left_sym, r.right_sym) for r in bpe_train(d).collect()]
-    return bpe_apply(d, merges)
+    """(word, cnt, p, s): the documents table's word types encoded under
+    their own BPE_ROUNDS trained merges, one row per symbol position — the
+    trainer's final stream (``_bpe_rounds``), which ``bpe_apply`` would
+    rebuild by replaying the merges. Both the encode and the decode
+    query aggregate it."""
+    rounds = _bpe_rounds(load(spark, sf_dir, "documents"), BPE_ROUNDS, "text", BPE_EOW)
+    return rounds[-1][1]
 
 
 @query(
@@ -2614,13 +2646,12 @@ def text_bpe_encode_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENCODE half of the BPE loop: the corpus token distribution
     under the trained tokenizer, per symbol its corpus occurrences (Σ
     word count over positions) and word-type spread. Fixes the corpus
-    and its own BPE_ROUNDS trained merges (``_bpe_encoded``); the
-    encoding is ``bpe_apply``'s. The pure-Python scanner in
+    and its own BPE_ROUNDS trained merges (``_bpe_encoded``, one row per
+    encoded symbol position). The pure-Python scanner in
     tests/test_r9_semantics.py re-derives every count."""
-    enc = _bpe_encoded(spark, sf_dir)
     return (
-        enc.select("word", "cnt", F.explode("symbols").alias("symbol"))
-        .groupBy("symbol")
+        _bpe_encoded(spark, sf_dir)
+        .groupBy(F.col("s").alias("symbol"))
         .agg(
             F.sum("cnt").cast("bigint").alias("occurrences"),
             F.countDistinct("word").cast("bigint").alias("word_types"),
@@ -2659,7 +2690,7 @@ def text_bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip_exact_types == word_types in every bucket, because merges
     only concatenate adjacent symbols; tests/test_r10_semantics.py pins
     that with the sequential Python scanner."""
-    enc = _bpe_encoded(spark, sf_dir)
+    enc = _bpe_symbols(_bpe_encoded(spark, sf_dir))
     return enc.groupBy("n_symbols").agg(
         F.count(F.lit(1)).cast("bigint").alias("word_types"),
         F.sum("cnt").cast("bigint").alias("corpus_tokens"),
@@ -3020,12 +3051,7 @@ def bpe_apply(
         # pay it.
         if (i + 1) % 16 == 0 and i + 1 < len(merges):
             stream = stream.localCheckpoint(eager=True)
-    return stream.groupBy("word", "cnt").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("p", "s"))), lambda x: x["s"]
-        ).alias("symbols"),
-        F.count(F.lit(1)).cast("bigint").alias("n_symbols"),
-    )
+    return _bpe_symbols(stream)
 
 
 #: text_bpe_library_apply merge table — a FIXED external artifact, not

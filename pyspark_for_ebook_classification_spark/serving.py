@@ -1,21 +1,32 @@
-"""Build once, serve many: reuse a model built from a persisted input.
+"""Build once, serve many: reuse state built from a persisted input.
 
 A library entry that splits into a build step and a score step
 (``ml.queries.nb_fit``/``nb_score``, ``operators.textops.bm25_index``/
-``bm25_query``) gets its model through ``built_for``. The model is reused
-only while the input DataFrame is persisted and still backed by the SAME
-Spark cache entry:
+``bm25_query``, and ``operators.similarity.ann_topk``'s corpus norms)
+gets its state through ``built_for``. The state is reused only while the
+input DataFrame is persisted and still backed by the SAME Spark cache
+entry:
 
 - the memo is keyed weakly on the input DataFrame object, so a dropped
-  frame drops its models;
-- each stored model remembers the cache entry it was built from (the id
+  frame drops its state;
+- each stored state remembers the cache entry it was built from (the id
   of that entry's size accumulator, unique per entry in the JVM); after
   ``unpersist()``, ``spark.catalog.clearCache()`` or an unpersist followed
   by a re-cache, the entry is gone or new and the next call builds afresh;
-- an input with no cache entry of its own is never memoized, so one-shot
-  calls keep their single-pass plan;
-- a model is stored only after its build returns, so a failed build
-  leaves nothing behind.
+- an input with no cache entry of its own is never memoized or
+  materialized, so a one-shot call builds the same plan as the build
+  and score steps called directly;
+- state is stored only after its build and materialization return, so a
+  failed build leaves nothing behind.
+
+State built for a persisted input is materialized once, table by table
+(``localCheckpoint(eager=True)``). A table whose stored size is no larger
+than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is then held as
+ONE partition (``coalesce(1)``, checkpointed again): the planner sees
+``SinglePartition`` on it, so a request's aggregate, window or top-k over
+rows streamed from that table needs no exchange, and each exchange a
+request avoids is a Spark job it does not run. A larger table stays
+distributed as its build left it.
 
 No flag, env var or parameter switches this on: persisting the input is
 the signal that it will be served again.
@@ -30,7 +41,7 @@ from pyspark.sql import DataFrame
 
 M = TypeVar("M")
 
-#: input DataFrame -> {build key: (cache entry id, model)}
+#: input DataFrame -> {build key: (cache entry id, state)}
 _MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
@@ -45,18 +56,43 @@ def _cache_entry_id(df: DataFrame) -> int | None:
 
 
 def built_for(df: DataFrame, key: Hashable, build: Callable[[], M]) -> M:
-    """``build()``'s model for ``df``, reused while ``df``'s cache entry
+    """``build()``'s state for ``df``, reused while ``df``'s cache entry
     is the one it was built from. ``key`` names the build and its
-    build-side parameters (never score-side ones)."""
+    build-side parameters (never score-side ones). ``build`` returns a
+    DataFrame or a NamedTuple of them; for a persisted ``df`` each one is
+    materialized before it is stored (see the module docstring)."""
     entry = _cache_entry_id(df)
     if entry is None:
         _MEMO.pop(df, None)
         return build()
     models = {k: v for k, v in _MEMO.get(df, {}).items() if v[0] == entry}
     if key not in models:
-        models[key] = (entry, build())
+        models[key] = (entry, _held(build()))
     _MEMO[df] = models
     return models[key][1]
+
+
+def _held(state):
+    """``state`` with each of its DataFrames materialized, as one
+    partition when it is small enough (see the module docstring)."""
+    if not isinstance(state, DataFrame):
+        return type(state)(*map(_held, state))
+    held = state.localCheckpoint(eager=True)
+    spark = held.sparkSession
+    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    if _stored_bytes(held) <= limit:
+        held = held.coalesce(1).localCheckpoint(eager=True)
+    return held
+
+
+def _stored_bytes(held: DataFrame) -> int:
+    """Bytes the block manager holds for ``held``, the result of an eager
+    ``localCheckpoint``."""
+    rdd_id = held._jdf.queryExecution().analyzed().rdd().id()
+    infos = held.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos if i.id() == rdd_id)
 
 
 def require_columns(who: str, what: str, df: DataFrame, cols: Iterable[str]) -> None:

@@ -318,8 +318,8 @@ def test_nb_bad_input_fails_loudly_and_keeps_the_model(spark):
         with pytest.raises(ValueError, match="test lacks column"):
             nb_classify(train, _nb_test(spark).withColumnRenamed("text", "body"))
         model = nb_fit(train)
-        with pytest.raises(ValueError, match="model.labels lacks column"):
-            nb_score(model._replace(labels=model.labels.drop("v")), _nb_test(spark))
+        with pytest.raises(ValueError, match="model.table lacks column"):
+            nb_score(model._replace(table=model.table.drop("v")), _nb_test(spark))
         with pytest.raises(ValueError, match="train lacks column"):
             nb_classify(unlabeled, _nb_test(spark))
         assert unlabeled not in serving._MEMO
@@ -341,11 +341,14 @@ def test_nb_library_classify_repeats_in_one_session(spark, sf_dir):
 
 
 def test_bpe_apply_of_trained_merges_matches_encode_query(spark, sf_dir):
-    """bpe_train -> collect merge table -> bpe_apply (the encode query's
-    own path) decodes losslessly: every word type's symbols re-concatenate
-    to the original word plus the end-of-word marker."""
+    """bpe_train -> collect merge table -> bpe_apply rebuilds exactly the
+    trainer's final stream, which the encode and decode queries aggregate
+    (``_bpe_encoded``), and decodes losslessly: every word type's symbols
+    re-concatenate to the original word plus the end-of-word marker."""
     from pyspark_for_ebook_classification_spark.operators.textops import (
         BPE_ROUNDS,
+        _bpe_encoded,
+        _bpe_symbols,
         bpe_apply,
         bpe_train,
     )
@@ -357,6 +360,9 @@ def test_bpe_apply_of_trained_merges_matches_encode_query(spark, sf_dir):
     ]
     applied = bpe_apply(d, merges).collect()
     assert applied
+    assert sorted(map(tuple, applied)) == sorted(
+        map(tuple, _bpe_symbols(_bpe_encoded(spark, sf_dir)).collect())
+    )
     for r in applied:
         assert "".join(r.symbols) == r.word + "</w>"
         assert r.n_symbols == len(r.symbols)
