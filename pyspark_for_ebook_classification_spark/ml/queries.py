@@ -21,7 +21,11 @@ from pyspark_for_ebook_classification_spark.ml.pipeline import (
     split_train_test,
 )
 from pyspark_for_ebook_classification_spark.plans.registry import query
-from pyspark_for_ebook_classification_spark.serving import built_for, require_columns
+from pyspark_for_ebook_classification_spark.serving import (
+    broadcastable,
+    built_for,
+    require_columns,
+)
 from pyspark_for_ebook_classification_spark.sources.io import load
 
 
@@ -1152,18 +1156,20 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     Plan shape (r15's single training pass): one checkpointed (label x
     vocab)-bounded count table feeds the vocabulary and every per-label
     statistic, and n_train folds over the per-label doc counts
-    (_with_n_train). The cut points are ``localCheckpoint(eager=False)``:
-    no cut stores rows until the first action that reads the model, after
-    which every further score reads the stored tables. Under AQE a cut
-    does run its plan's shuffle stages when it is made, so building even
-    a one-shot fit+score frame starts those jobs.
+    (_with_n_train). The counts, the vocabulary and the label rows are
+    cut with ``localCheckpoint(eager=False)``: no cut stores rows until
+    the first action that reads the model, after which every further
+    score reads the stored tables. Under AQE a cut does run its plan's
+    shuffle stages when it is made, so building even a one-shot
+    fit+score frame starts those jobs. The (label x vocabulary) table
+    itself is a lazy join of the three.
 
     Reuse: ``nb_classify`` keeps the model of a PERSISTED ``train``
-    (``serving.built_for``, which materializes it, as one partition when
-    small) for as long as the same Spark cache entry backs it; after
-    ``unpersist()``, ``spark.catalog.clearCache()`` or a re-cache it
-    builds a fresh one, and an unpersisted ``train`` is never memoized.
-    Call nb_fit directly to hold a model yourself."""
+    (``serving.built_for``, which materializes the table, as one
+    partition when small) for as long as the same Spark cache entry
+    backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
+    re-cache it builds a fresh one, and an unpersisted ``train`` is never
+    memoized. Call nb_fit directly to hold a model yourself."""
     require_columns("nb_fit", "train", train, (label_col, text_col))
     tr = train.select(F.col(label_col).alias("lang"), _nb_tokens(text_col).alias("tokens"))
     counts = (
@@ -1179,6 +1185,7 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     labels = (
         _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
         .join(per_label, "lang")
+        .localCheckpoint(eager=False)
     )
     table = (
         labels.crossJoin(vocab)
@@ -1192,7 +1199,6 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
             "n_docs",
             "n_train",
         )
-        .localCheckpoint(eager=False)
     )
     return NBModel(table)
 
@@ -1222,18 +1228,23 @@ def nb_score(
     argmax ties to the alphabetically first label. Test tokens outside
     the train vocab are dropped; a doc with none left emits no row.
 
-    Plan: the request is hash-partitioned by doc id once, and the model
-    table is broadcast into it, so the per-(doc, token) tf aggregate, the
-    per-(doc, label) score aggregate and the per-doc argmax window all
-    run behind that one exchange."""
+    Plan: against a ``serving.broadcastable`` model table (one held for
+    a persisted train, small enough for Spark to broadcast) the request
+    is hash-partitioned by doc id once and the table is broadcast into
+    it, so the per-(doc, token) tf aggregate, the per-(doc, label) score
+    aggregate and the per-doc argmax window all run behind that one
+    exchange. Any other model table's join is the planner's pick."""
     if alpha <= 0:
         raise ValueError(f"nb_score: need alpha > 0, got {alpha}")
     require_columns("nb_score", "model.table", model.table, _NB_MODEL_COLS)
     require_columns("nb_score", "test", test, (id_col, text_col))
+    table = model.table
+    te = test.select(F.col(id_col).alias("doc_id"), _nb_tokens(text_col).alias("tokens"))
+    if broadcastable(table):
+        table = F.broadcast(table)
+        te = te.repartition("doc_id")
     te_tok = (
-        test.select(F.col(id_col).alias("doc_id"), _nb_tokens(text_col).alias("tokens"))
-        .repartition("doc_id")
-        .select("doc_id", F.explode("tokens").alias("token"))
+        te.select("doc_id", F.explode("tokens").alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -1246,7 +1257,7 @@ def nb_score(
     )
     log_prior = F.round(F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6)
     scored = (
-        te_tok.join(F.broadcast(model.table), "token")
+        te_tok.join(table, "token")
         .groupBy("doc_id", "cand_lang")
         .agg(
             (
@@ -1290,10 +1301,11 @@ def nb_classify(
     Spark cache entry backs ``train`` (see nb_fit and serving.built_for);
     an unpersisted ``train`` is fitted in the same plan as the scoring.
 
-    Scale shape: the model is one (label x vocabulary)-sized table,
-    BROADCAST; scoring hash-partitions the test docs by id once, then
-    joins map-side and runs the (doc, label)-keyed aggregate and the
-    per-doc argmax behind that exchange; training is one token-keyed
+    Scale shape: the model is one (label x vocabulary)-sized table;
+    scoring joins it to the test token stream, then runs a (doc,
+    label)-keyed aggregate and the per-doc argmax; a served model small
+    enough to broadcast is joined map-side behind one exchange of the
+    test docs by id (see nb_score); training is one token-keyed
     combine. No corpus self-join anywhere. MLlib's
     NaiveBayes (ml/pipeline.py) stays the production surface when
     HashingTF features are wanted; this is the engine-native form whose

@@ -1619,8 +1619,8 @@ def _bm25_doc_topk(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
 class BM25Index(NamedTuple):
     """``bm25_index``'s corpus-side state."""
 
-    #: (doc_id, token, tf, dl_ratio, idf): term counts with each doc's
-    #: length over the corpus mean length (dl/avgdl) and the term's idf
+    #: (doc_id, token, tf, dl_ratio): term counts with each doc's length
+    #: over the corpus mean length (dl/avgdl)
     tf: DataFrame
     #: one row (n_docs, total_tokens)
     stats: DataFrame
@@ -1628,14 +1628,17 @@ class BM25Index(NamedTuple):
     df: DataFrame
 
 
-#: the columns of ``BM25Index.tf``, the one table ``bm25_query`` reads
-_BM25_TF_COLS = ("doc_id", "token", "tf", "dl_ratio", "idf")
+#: the columns ``bm25_query`` reads; it reads no ``stats``
+_BM25_INDEX_COLS = {
+    "tf": ("doc_id", "token", "tf", "dl_ratio"),
+    "df": ("token", "df", "idf"),
+}
 
 
 def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text") -> BM25Index:
-    """Build step of ``bm25_search``: the corpus tf table (with dl/avgdl
-    and idf), the one-row stats and the df table (with idf), all from ONE
-    corpus pass. Tokens are the non-empty pieces of a split on single spaces.
+    """Build step of ``bm25_search``: the corpus tf table (with dl/avgdl),
+    the one-row stats and the df table (with idf), all from ONE corpus
+    pass. Tokens are the non-empty pieces of a split on single spaces.
 
     The (doc_id, token, tf, dl) count table is built once and every
     consumer — df counts, a query-term build, the probe and the corpus
@@ -1649,19 +1652,20 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
     elsewhere, since every consumer reaches tf through an equi-join on
     ``token``. The one-row stats are cut too, so their two broadcast
     consumers (idf into df, dl/avgdl into tf) do not each re-aggregate
-    the counts. Every corpus-side factor is folded in here, with the
-    expressions ``bm25_query``'s formula names: df's idf is broadcast
-    into tf (the vocabulary-sized side), so a query reads tf alone and
-    broadcasts only its own terms.
+    the counts. At 100 TB that trades one (doc, term)-sized local write
+    for four corpus passes. The corpus-side factors idf and dl/avgdl are
+    the same expressions ``bm25_query``'s formula names, so a query reads
+    no stats.
 
-    The cut points are ``localCheckpoint(eager=False)``: no cut stores
-    rows until the first action that reads the index, and every later
-    query reads the stored tables. Under AQE a cut does run its plan's
-    shuffle stages when it is made, so building even a one-shot
-    index+query frame starts those jobs.
+    The three cut points are ``localCheckpoint(eager=False)``: no cut
+    stores rows until the first action that reads the index, and every
+    later query reads the stored tables. Under AQE a cut does run its
+    plan's shuffle stages when it is made, so building even a one-shot
+    index+query frame starts those jobs. idf and dl/avgdl are folded in
+    on top of the cuts, lazily.
 
-    Reuse: ``bm25_search`` keeps the index of a PERSISTED ``docs``
-    (``serving.built_for``, which materializes each table, as one
+    Reuse: ``bm25_search`` keeps the tf and df tables of a PERSISTED
+    ``docs`` (``serving.built_for``, which materializes each, as one
     partition when small) for as long as the same Spark cache entry
     backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
     re-cache it builds a fresh one, and an unpersisted ``docs`` is never
@@ -1687,21 +1691,18 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
         )
         .localCheckpoint(eager=False)
     )
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    dfr = (
-        counts.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats.select("n_docs")))
-        .select("token", "df", idf.alias("idf"))
-        .localCheckpoint(eager=False)
+    dfr = counts.groupBy("token").agg(F.count(F.lit(1)).alias("df")).localCheckpoint(eager=False)
+    avgdl = stats.select(F.col("total_tokens").cast("double") / F.col("n_docs")).scalar()
+    n_docs = stats.select("n_docs").scalar()
+    return BM25Index(
+        counts.select("doc_id", "token", "tf", (F.col("dl") / avgdl).alias("dl_ratio")),
+        stats,
+        dfr.select(
+            "token",
+            "df",
+            F.log((n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0).alias("idf"),
+        ),
     )
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs")
-    tf = (
-        counts.join(F.broadcast(dfr.select("token", "idf")), "token")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", "token", "tf", (F.col("dl") / avgdl).alias("dl_ratio"), "idf")
-    )
-    return BM25Index(tf, stats, dfr)
 
 
 def bm25_query(
@@ -1731,10 +1732,10 @@ def bm25_query(
     doc) sum runs through DECIMAL(28,6) (functions/numeric.py
     discipline) so partial-aggregation order cannot move the result.
 
-    Plan: the (query, token) rows broadcast into the tf probe; the
-    per-(query, doc) aggregate and the top-k window follow. Against a
-    one-partition index (a served corpus, see bm25_index) neither needs
-    an exchange."""
+    Plan: the query terms join df for their idf and broadcast into the
+    tf probe; the per-(query, doc) aggregate and the top-k window
+    follow. Against a one-partition index (a served
+    corpus, see bm25_index) neither needs an exchange."""
     if isinstance(queries, DataFrame):
         require_columns("bm25_query", "queries", queries, ("query", "token"))
         qterms = queries.select("query", "token")
@@ -1745,7 +1746,9 @@ def bm25_query(
             [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
             "query string, token string",
         )
-    require_columns("bm25_query", "index.tf", index.tf, _BM25_TF_COLS)
+    for name, cols in _BM25_INDEX_COLS.items():
+        require_columns("bm25_query", f"index.{name}", getattr(index, name), cols)
+    qt = qterms.join(index.df, "token").select("query", "token", "idf")
     contrib = F.col("idf") * (
         (F.col("tf") * F.lit(k1 + 1.0))
         / (
@@ -1754,7 +1757,7 @@ def bm25_query(
         )
     )
     scored = (
-        index.tf.join(F.broadcast(qterms), "token")
+        index.tf.join(F.broadcast(qt), "token")
         .select("query", "doc_id", contrib.alias("c"))
         .groupBy("query", "doc_id")
         .agg(F.sum(F.col("c").cast("decimal(28,6)")).cast("double").alias("score"))
@@ -1807,7 +1810,9 @@ def bm25_search(
     index = built_for(
         docs,
         ("bm25_index", id_col, text_col),
-        lambda: bm25_index(docs, id_col=id_col, text_col=text_col),
+        # bm25_query reads no stats: holding them would store a table no
+        # request reads
+        lambda: bm25_index(docs, id_col=id_col, text_col=text_col)._replace(stats=None),
     )
     return bm25_query(index, queries, k=k, k1=k1, b=b, id_col=id_col)
 

@@ -21,12 +21,21 @@ entry:
 
 State built for a persisted input is materialized once, table by table
 (``localCheckpoint(eager=True)``). A table whose stored size is no larger
-than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is then held as
-ONE partition (``coalesce(1)``, checkpointed again): the planner sees
+than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (Spark's own
+target size of one shuffle partition) is then held as ONE partition
+(``coalesce(1)``, checkpointed again): the planner sees
 ``SinglePartition`` on it, so a request's aggregate, window or top-k over
 rows streamed from that table needs no exchange, and each exchange a
 request avoids is a Spark job it does not run. A larger table stays
-distributed as its build left it.
+distributed as its build left it. Only the small side has been measured
+(the perfbench corpora hold kilobytes of state); whether a table near the
+cutoff serves faster as one partition than distributed is untested.
+
+A held table no larger than ``spark.sql.autoBroadcastJoinThreshold`` is
+``broadcastable``: Spark would broadcast it on its own if it knew its
+size, so a score step may pin that pick with a broadcast hint, and the
+build side of its join then cannot flip from one request to the next.
+Every other join is left to the planner.
 
 No flag, env var or parameter switches this on: persisting the input is
 the signal that it will be served again.
@@ -43,6 +52,8 @@ M = TypeVar("M")
 
 #: input DataFrame -> {build key: (cache entry id, state)}
 _MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+#: held DataFrame -> the bytes the block manager stores for it
+_STORED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _cache_entry_id(df: DataFrame) -> int | None:
@@ -59,7 +70,8 @@ def built_for(df: DataFrame, key: Hashable, build: Callable[[], M]) -> M:
     """``build()``'s state for ``df``, reused while ``df``'s cache entry
     is the one it was built from. ``key`` names the build and its
     build-side parameters (never score-side ones). ``build`` returns a
-    DataFrame or a NamedTuple of them; for a persisted ``df`` each one is
+    DataFrame or a NamedTuple of DataFrames; a field the score step does
+    not read may be None. For a persisted ``df`` each DataFrame is
     materialized before it is stored (see the module docstring)."""
     entry = _cache_entry_id(df)
     if entry is None:
@@ -72,19 +84,35 @@ def built_for(df: DataFrame, key: Hashable, build: Callable[[], M]) -> M:
     return models[key][1]
 
 
+def broadcastable(df: DataFrame) -> bool:
+    """Whether ``df`` is a table ``built_for`` holds whose stored size is
+    within ``spark.sql.autoBroadcastJoinThreshold``."""
+    stored = _STORED.get(df)
+    return stored is not None and stored <= _conf_bytes(df, "spark.sql.autoBroadcastJoinThreshold")
+
+
 def _held(state):
     """``state`` with each of its DataFrames materialized, as one
     partition when it is small enough (see the module docstring)."""
+    if state is None:
+        return None
     if not isinstance(state, DataFrame):
         return type(state)(*map(_held, state))
     held = state.localCheckpoint(eager=True)
-    spark = held.sparkSession
-    limit = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    )
-    if _stored_bytes(held) <= limit:
+    stored = _stored_bytes(held)
+    if stored <= _conf_bytes(held, "spark.sql.adaptive.advisoryPartitionSizeInBytes"):
         held = held.coalesce(1).localCheckpoint(eager=True)
+    _STORED[held] = stored
     return held
+
+
+def _conf_bytes(df: DataFrame, key: str) -> int:
+    """The session conf ``key`` of ``df``, a byte size, in bytes (-1
+    stays -1, Spark's "off")."""
+    spark = df.sparkSession
+    value = spark.conf.get(key).strip()
+    size = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(value.lstrip("-"))
+    return -size if value.startswith("-") else size
 
 
 def _stored_bytes(held: DataFrame) -> int:

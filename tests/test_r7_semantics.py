@@ -517,8 +517,8 @@ def test_bm25_bad_input_fails_loudly_and_keeps_the_index(spark):
             bm25_search(untexted, ["alpha"], k=5)
         assert untexted not in serving._MEMO
         index = bm25_index(docs)
-        with pytest.raises(ValueError, match="index.tf lacks column"):
-            bm25_query(index._replace(tf=index.tf.drop("idf")), ["alpha"])
+        with pytest.raises(ValueError, match="index.df lacks column"):
+            bm25_query(index._replace(df=index.df.drop("df")), ["alpha"])
         assert docs in serving._MEMO
         assert _rows(bm25_search(docs, ["alpha gamma"], k=5)) == good
     finally:

@@ -13,9 +13,9 @@ import weakref
 import pytest
 
 from pyspark_for_ebook_classification_spark import serving
-from pyspark_for_ebook_classification_spark.ml.queries import nb_classify
+from pyspark_for_ebook_classification_spark.ml.queries import nb_classify, nb_fit
 from pyspark_for_ebook_classification_spark.operators.similarity import ann_topk
-from pyspark_for_ebook_classification_spark.operators.textops import bm25_search
+from pyspark_for_ebook_classification_spark.operators.textops import bm25_index, bm25_search
 from pyspark_for_ebook_classification_spark.sources.io import load
 
 _ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -102,10 +102,13 @@ def test_served_rows_equal_one_shot_rows(spark, sf_dir, cutoff, shuffle):
             assert held[src] in serving._MEMO
         # the default cutoff holds every table as one partition; a 1-byte
         # cutoff leaves each corpus-keyed table (NB's model table, BM25's
-        # tf, ANN's norms) distributed
+        # tf, ANN's norms) distributed. BM25 holds no stats, which
+        # bm25_query does not read.
         for src, frame in held.items():
             for _, state in serving._MEMO[frame].values():
-                tables = [state] if hasattr(state, "_jdf") else list(state)
+                if src == "docs":
+                    assert state.stats is None
+                tables = [state] if hasattr(state, "_jdf") else [t for t in state if t is not None]
                 if cutoff == "default":
                     assert all(_partitioning(t) == "SinglePartition" for t in tables), src
                 else:
@@ -120,13 +123,21 @@ def test_served_rows_equal_one_shot_rows(spark, sf_dir, cutoff, shuffle):
 def test_served_requests_run_few_jobs(spark, sf_dir, count_jobs):
     """Against held state a second request runs at most 3 Spark jobs for
     nb_classify and bm25_search and 2 for ann_topk. Building an
-    ann_topk frame over an unpersisted corpus starts none. (nb_fit's and
-    bm25_index's lazy cut points run their shuffle stages when the frame
-    is built, as they did before the state was held.)"""
+    ann_topk frame over an unpersisted corpus starts none; building an
+    nb_classify or bm25_search frame over an unpersisted input starts no
+    more than building its model or index alone (nb_fit's and
+    bm25_index's lazy cut points run their shuffle stages when they are
+    made)."""
     docs, queries, qvecs = _requests(spark, sf_dir)
     plain = load(spark, sf_dir, "embeddings")
     _, jobs = count_jobs(lambda: ann_topk(plain, qvecs, k=5))
     assert jobs == 0
+    _, fit_jobs = count_jobs(lambda: nb_fit(_train(spark, sf_dir)))
+    _, jobs = count_jobs(lambda: nb_classify(_train(spark, sf_dir), docs))
+    assert jobs <= fit_jobs
+    _, index_jobs = count_jobs(lambda: bm25_index(load(spark, sf_dir, "documents")))
+    _, jobs = count_jobs(lambda: bm25_search(load(spark, sf_dir, "documents"), queries, k=5))
+    assert jobs <= index_jobs
     calls = {
         "nb_classify": (lambda c: nb_classify(c, docs), "train", 3),
         "bm25_search": (lambda c: bm25_search(c, queries, k=5), "docs", 3),
@@ -145,8 +156,8 @@ def test_served_requests_run_few_jobs(spark, sf_dir, count_jobs):
 
 def test_warm_served_calls_compile_no_new_class(spark, sf_dir):
     """Served calls 2 to 5 of each entry, each with a new request, compile
-    no generated class: every served join has a pinned broadcast side, so
-    the plan shape does not change from call to call."""
+    no generated class: the plan shape, the build side of every join
+    included, does not change from call to call."""
     compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     docs = load(spark, sf_dir, "documents")
     texts = [r.text for r in docs.filter("doc_id % 5 = 0").orderBy("doc_id").limit(20).collect()]
@@ -173,6 +184,28 @@ def test_warm_served_calls_compile_no_new_class(spark, sf_dir):
     finally:
         for frame in held.values():
             frame.unpersist()
+
+
+def test_nb_serves_without_broadcast(spark, sf_dir):
+    """With broadcasts off, a held NB model table is not
+    ``broadcastable``: the served call leaves its join to the planner
+    and returns the rows of an unpersisted one-shot call."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    docs, _, _ = _requests(spark, sf_dir)
+    train = _train(spark, sf_dir).cache()
+    try:
+        spark.conf.set(key, "-1")
+        want = _rows(nb_classify(_train(spark, sf_dir), docs))
+        assert want
+        assert _rows(nb_classify(train, docs)) == want
+        (_, model), = serving._MEMO[train].values()
+        assert not serving.broadcastable(model.table)
+        spark.conf.set(key, saved)
+        assert serving.broadcastable(model.table)
+    finally:
+        train.unpersist()
+        spark.conf.set(key, saved)
 
 
 _EMB_ROWS = [
