@@ -1650,19 +1650,19 @@ def bm25_index(docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text
     (doc_id, NULL) row per zero-token document, so n_docs counts every
     document and Σdl sums every size(tokens); NULL-token rows are inert
     elsewhere, since every consumer reaches tf through an equi-join on
-    ``token``. The one-row stats are cut too, so their two broadcast
-    consumers (idf into df, dl/avgdl into tf) do not each re-aggregate
-    the counts. At 100 TB that trades one (doc, term)-sized local write
-    for four corpus passes. The corpus-side factors idf and dl/avgdl are
-    the same expressions ``bm25_query``'s formula names, so a query reads
-    no stats.
+    ``token``. The one-row stats are cut too, so their two consumers (idf
+    into df, dl/avgdl into tf) do not each re-aggregate the counts. At
+    100 TB that trades one (doc, term)-sized local write for four corpus
+    passes. idf and dl/avgdl are the expressions ``bm25_query``'s formula
+    names, each over a scalar subquery of the stats, so a query reads no
+    stats and the fold adds no cut, join or eager job; a consumer that
+    does not read a folded column does not run its subquery.
 
     The three cut points are ``localCheckpoint(eager=False)``: no cut
     stores rows until the first action that reads the index, and every
     later query reads the stored tables. Under AQE a cut does run its
     plan's shuffle stages when it is made, so building even a one-shot
-    index+query frame starts those jobs. idf and dl/avgdl are folded in
-    on top of the cuts, lazily.
+    index+query frame starts those jobs.
 
     Reuse: ``bm25_search`` keeps the tf and df tables of a PERSISTED
     ``docs`` (``serving.built_for``, which materializes each, as one
