@@ -18,8 +18,9 @@ round-over-round table. The full self-describing record (verbose
 second-pass reasons, both comparable lists) is written to BENCH.json
 next to this script instead; stdout carries the contract fields plus
 compact summaries, including PROOF of the core count the run actually
-used (``parallelism``: resolved master + defaultParallelism — r14's
-``suspect_cpus_ignored`` false-positived for lack of exactly this).
+used (``parallelism``: resolved master, defaultParallelism and the SQL
+leaf parallelism — r14's ``suspect_cpus_ignored`` false-positived for
+lack of exactly this).
 """
 
 from __future__ import annotations
@@ -509,6 +510,9 @@ def main() -> None:
         "parallelism": {
             "master": sc.master,
             "default_parallelism": sc.defaultParallelism,
+            # the partition count of SQL scans; get_spark sets the RDD
+            # default above to 1 (session.RDD_DEFAULT_PARALLELISM)
+            "leaf_parallelism": spark._jsparkSession.leafNodeDefaultParallelism(),
             "shuffle_partitions": int(
                 spark.conf.get("spark.sql.shuffle.partitions")
             ),

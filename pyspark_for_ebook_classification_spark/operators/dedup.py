@@ -143,12 +143,14 @@ def _fanout_partitions(df: DataFrame) -> int:
     exchange to ~1 partition and re-serialize the whole amplified stage
     (the exact single-task failure mode this repartition exists to
     prevent). A non-integer setting (some platforms set ``auto``) falls
-    back to the context's default parallelism."""
+    back to the session's SQL leaf parallelism, the partition count of its
+    scans: the context's default parallelism is 1 in a get_spark session
+    (see session.RDD_DEFAULT_PARALLELISM)."""
     spark = df.sparkSession
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
-        return spark.sparkContext.defaultParallelism
+        return spark._jsparkSession.leafNodeDefaultParallelism()
 
 
 def _lcg_seeds(num_hashes: int) -> tuple[list[int], list[int]]:

@@ -1735,16 +1735,25 @@ def bm25_query(
     Plan: the query terms join df for their idf and broadcast into the
     tf probe; the per-(query, doc) aggregate and the top-k window
     follow. Against a one-partition index (a served
-    corpus, see bm25_index) neither needs an exchange."""
+    corpus, see bm25_index) neither needs an exchange. Query strings
+    become literal rows on the JVM, so they start no Python task, and the
+    planner, which knows their size, broadcasts them into the df join
+    rather than df."""
     if isinstance(queries, DataFrame):
         require_columns("bm25_query", "queries", queries, ("query", "token"))
         qterms = queries.select("query", "token")
     elif isinstance(queries, str) or not all(isinstance(q, str) for q in queries):
         raise ValueError(f"bm25_query: queries must be a list of strings, got {queries!r}")
     else:
-        qterms = index.tf.sparkSession.createDataFrame(
-            [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
-            "query string, token string",
+        # literal structs inlined on the JVM: a frame made from a Python
+        # list would run a Python worker task and carry no size estimate
+        terms = [
+            F.struct(F.lit(q).alias("query"), F.lit(t).alias("token"))
+            for q in queries
+            for t in dict.fromkeys(w for w in q.split(" ") if w)
+        ]
+        qterms = index.tf.sparkSession.range(1, numPartitions=1).select(
+            F.inline(F.array(*terms).cast("array<struct<query:string,token:string>>"))
         )
     for name, cols in _BM25_INDEX_COLS.items():
         require_columns("bm25_query", f"index.{name}", getattr(index, name), cols)
@@ -1801,8 +1810,8 @@ def bm25_search(
 
     Same scale shape as the declared query: one tokenize+explode+combine
     builds the (doc, token, tf) table; the query-term table — |queries| ×
-    their distinct whitespace tokens, built driver-side from plain
-    strings — BROADCASTS to it, so the corpus-sized side never shuffles
+    their distinct whitespace tokens, literal rows made on the JVM from
+    plain strings — BROADCASTS to it, so the corpus-sized side never shuffles
     to be probed; per-(query,doc) partial-aggregated sum; top-k is a
     WindowGroupLimit. Unmatched query terms contribute nothing (df from
     the corpus; terms absent from the corpus have no tf rows); a query

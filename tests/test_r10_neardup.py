@@ -180,7 +180,9 @@ def test_fanout_partitions_falls_back_on_non_integer_conf(spark, monkeypatch):
     """Some platforms set ``spark.sql.shuffle.partitions`` to ``auto``.
     Open-source Spark's setter rejects that value, so the conf read is
     faked inside a scoped block: the minhash plan must build on the
-    context's default parallelism instead of raising ValueError."""
+    session's SQL leaf parallelism (one partition per core) instead of
+    raising ValueError, not on the context's default parallelism, which
+    get_spark sets to 1."""
     from pyspark.sql.conf import RuntimeConfig
 
     from pyspark_for_ebook_classification_spark.operators.dedup import _fanout_partitions
@@ -198,7 +200,7 @@ def test_fanout_partitions_falls_back_on_non_integer_conf(spark, monkeypatch):
     )
     with monkeypatch.context() as m:
         m.setattr(RuntimeConfig, "get", get)
-        assert _fanout_partitions(docs) == spark.sparkContext.defaultParallelism
+        assert _fanout_partitions(docs) == int(spark.conf.get("spark.sql.leafNodeDefaultParallelism"))
         out = neardup_dedup(docs)
     assert {(r.doc_id, r.cluster_id, r.keep) for r in out.collect()} == {
         (1, 1, True),

@@ -414,6 +414,55 @@ def test_bm25_query_frame_matches_string_path(spark):
     )
 
 
+def test_bm25_query_strings_without_terms_match_nothing(spark):
+    """A query of only spaces has no term: it returns no rows and leaves
+    the other queries' rows as they are alone; no query at all returns
+    no rows either."""
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+    )
+
+    index = bm25_index(_bm25_docs(spark))
+    assert _rows(bm25_query(index, ["   "], k=3)) == []
+    assert _rows(bm25_query(index, [], k=3)) == []
+    alone = _rows(bm25_query(index, ["alpha gamma"], k=3))
+    assert alone and _rows(bm25_query(index, ["   ", "alpha gamma"], k=3)) == alone
+
+
+def _rdd_leaf_columns(df) -> list[set[str]]:
+    """Column names of each RDD-backed leaf (``Scan ExistingRDD``) in the
+    optimized plan of ``df``."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            attrs = leaf.output()
+            out.append({attrs.apply(j).name() for j in range(attrs.size())})
+    return out
+
+
+def test_bm25_query_terms_are_built_on_the_jvm(spark):
+    """Query strings become (query, token) rows without an RDD made from a
+    Python list, so scoring them runs no Python worker task: the plan's
+    RDD-backed leaves are the index's own. A frame of the same terms made
+    with createDataFrame is such a leaf, which the check sees."""
+    from pyspark_for_ebook_classification_spark.operators.textops import (
+        bm25_index,
+        bm25_query,
+    )
+
+    index = bm25_index(_bm25_docs(spark))
+    leaves = _rdd_leaf_columns(bm25_query(index, ["alpha gamma", "delta"], k=3))
+    assert leaves and not any("query" in cols for cols in leaves)
+    frame = spark.createDataFrame(
+        [("alpha gamma", "alpha"), ("alpha gamma", "gamma"), ("delta", "delta")],
+        "query string, token string",
+    )
+    assert {"query", "token"} in _rdd_leaf_columns(bm25_query(index, frame, k=3))
+
+
 def test_bm25_query_frame_needs_query_and_token(spark):
     from pyspark_for_ebook_classification_spark.operators.textops import (
         bm25_index,

@@ -2,8 +2,9 @@
 persisted input: the rows equal an unpersisted one-shot call's on both
 sides of the one-partition size cutoff and at 1 and 32 shuffle
 partitions; a served request runs a bounded number of Spark jobs and, once
-warm, compiles no new class; ``ann_topk``'s corpus state follows the same
-memo rules as the NB model and the BM25 index."""
+warm, compiles no new class; the rows do not depend on the request frame's
+partition count; ``ann_topk``'s corpus state follows the same memo rules
+as the NB model and the BM25 index."""
 
 from __future__ import annotations
 
@@ -14,8 +15,13 @@ import pytest
 
 from pyspark_for_ebook_classification_spark import serving
 from pyspark_for_ebook_classification_spark.ml.queries import nb_classify, nb_fit
-from pyspark_for_ebook_classification_spark.operators.similarity import ann_topk
-from pyspark_for_ebook_classification_spark.operators.textops import bm25_index, bm25_search
+from pyspark_for_ebook_classification_spark.operators import dedup
+from pyspark_for_ebook_classification_spark.operators.similarity import ann_topk, mmr_rerank
+from pyspark_for_ebook_classification_spark.operators.textops import (
+    bm25_index,
+    bm25_query,
+    bm25_search,
+)
 from pyspark_for_ebook_classification_spark.sources.io import load
 
 _ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -206,6 +212,60 @@ def test_nb_serves_without_broadcast(spark, sf_dir):
     finally:
         train.unpersist()
         spark.conf.set(key, saved)
+
+
+def test_rows_do_not_depend_on_request_partitions(spark, sf_dir):
+    """A request frame made from a Python list is one partition; the same
+    rows spread over 4 partitions give identical rows from nb_classify,
+    bm25_query's frame path, ann_topk, mmr_rerank and gate_score, each
+    scoring against held state as a server does."""
+    docs, queries, qvecs = _requests(spark, sf_dir)
+    terms = spark.createDataFrame(
+        [(q, t) for q in queries for t in dict.fromkeys(w for w in q.split(" ") if w)],
+        "query string, token string",
+    )
+    held = {src: frame.cache() for src, frame in _inputs(spark, sf_dir).items()}
+    try:
+        vec_of = {r.vec_id: r.embedding for r in held["emb"].collect()}
+        hits = ann_topk(held["emb"], qvecs, k=10, exclude_self=False).collect()
+        pool = spark.createDataFrame(
+            [(r.query_id, r.neighbor_id, float(r.cosine), vec_of[r.neighbor_id]) for r in hits],
+            "query_id long, cand_id long, rel double, embedding array<float>",
+        )
+        # copies of held-out corpus docs, and one doc matching nothing
+        batch = spark.createDataFrame(
+            [(1_000_000 + r.doc_id, r.text) for r in docs.limit(8).collect()]
+            + [(2_000_000, "zzz yyy xxx www vvv")],
+            "doc_id long, text string",
+        )
+        index = bm25_index(held["docs"])
+        gate_index = dedup.gate_static_index(held["docs"]).localCheckpoint(eager=True)
+
+        def gate(b):
+            shingled = (
+                b.select("doc_id", dedup._raw_tokens_expr().alias("tokens"))
+                .filter("size(tokens) >= 1")
+                .select("doc_id", dedup._shingles_expr().alias("shingles"))
+            )
+            return dedup.gate_score(dedup._gate_sig_cols(shingled), gate_index)
+
+        cases = {
+            "nb_classify": (lambda r: nb_classify(held["train"], r), docs),
+            "bm25_query": (lambda r: bm25_query(index, r, k=5), terms),
+            "ann_topk": (lambda r: ann_topk(held["emb"], r, k=10, exclude_self=False), qvecs),
+            "mmr_rerank": (lambda r: mmr_rerank(r, k=4), pool),
+            "gate_score": (gate, batch),
+        }
+        for name, (fn, request) in cases.items():
+            spread = request.repartition(4)
+            assert request.rdd.getNumPartitions() == 1, name
+            assert spread.rdd.getNumPartitions() == 4, name
+            want = _rows(fn(request))
+            assert want, name
+            assert _rows(fn(spread)) == want, name
+    finally:
+        for frame in held.values():
+            frame.unpersist()
 
 
 _EMB_ROWS = [
