@@ -303,10 +303,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
        saturates to the COMPLETE supplier graph at sf0.01 (4,950 =
        C(100,2) edges), and triangle work on a dense graph is TH(m^1.5)
        no matter how clever the enumeration (measured: 15x wall for 10x
-       data before this stage existed; scripts/scaling_check.py caught
-       it). Keeping each node's 8 heaviest edges (weight = co-ship
-       count, (w DESC, other) tiebreak — total and deterministic)
-       bounds |E| <= 8n, restores linear growth, and is what production
+       data, sf0.01 -> sf0.1, before this stage existed). Keeping each
+       node's 8 heaviest edges (weight = co-ship count, (w DESC, other)
+       tiebreak — total and deterministic) bounds |E| <= 8n, restores
+       linear growth, and is what production
        co-occurrence pipelines do before cubic analytics (strong-tie
        backbone / kNN-graph extraction). Cost: one partial-agg groupBy
        for weights plus one WindowGroupLimit rank — both linear.

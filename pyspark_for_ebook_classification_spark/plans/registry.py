@@ -66,189 +66,14 @@ class Query:
     #: may be empty at the driver's gate scale must say WHY here AND carry
     #: a planted-fixture companion test (tests/test_nonemptiness.py) that
     #: proves the operator emits rows when the data contains what it looks
-    #: for. Queries without this annotation are required by the guard to
-    #: return >= 1 row at the gate scale.
+    #: for. Queries without this annotation must return >= 1 row at the
+    #: gate scale: ``scripts/drive_entry.py`` at sf0.01 fails them as
+    #: vacuous otherwise.
     empty_ok: str = ""
 
 
 _REGISTRY: dict[str, Query] = {}
 _LOADED = False
-
-#: Driver-facing ordering. The verify harness checks declared queries in
-#: dict-insertion order and (observed round 1) caps the per-round
-#: correctness report at 50 entries — CORRECTNESS_r01.json stops exactly at
-#: the 50th registered query. Rotate coverage across rounds: queries NOT yet
-#: oracle-verified by the driver go first, then the flagship relational set,
-#: so every §2 row accumulates a driver verdict. Names absent from this list
-#: keep registration order after the listed ones (they were verified in a
-#: prior round; local pytest parity still covers them every run).
-_PRIORITY: tuple[str, ...] = (
-    # ========== front block (mechanical; scripts/rotate_priority.py
-    # output against union(CORRECTNESS_r01..r15) — 335/335 registered
-    # names verified, 0 never-verified, 0 active pins: pure freshness
-    # rotation — the standing HIGH_RISK families in cycle order, then
-    # oldest-verdict-first round-robin (the stalest surviving verdicts
-    # drain first).
-    "dedup_ngram_jaccard",
-    "agg_weighted_median",
-    "agg_ols_two_features",
-    "window_rfm_segments",
-    "agg_pareto_deciles",
-    "dedup_simhash_hamming_pairs",
-    "dedup_minhash_estimate_error",
-    "dedup_lsh_candidate_recall",
-    "text_minhash_containment",
-    "agg_histogram_width_bucket",
-    "data_curriculum_order",
-    "data_shuffle_deterministic",
-    "sim_ivfpq_adc_topk",
-    "sim_prefix_rerank_topk",
-    "sim_embedding_hygiene_gate",
-    "sim_centroid_shift_drift",
-    "text_source_overlap_grams",
-    "text_chunk_sliding",
-    "text_tokenizer_fertility",
-    "text_term_burstiness",
-    "text_nucleus_vocab",
-    "data_skew_audit",
-    "data_importance_resample",
-    "data_privacy_kl_audit",
-    "data_dp_noisy_counts",
-    "data_epoch_allocation",
-    "data_shard_token_balanced",
-    "data_packing_efficiency_report",
-    "data_zorder_layout",
-    "data_psi_drift",
-    "data_temperature_mixing",
-    "multimodal_phash_neardup",
-    "multimodal_token_budget",
-    "sketch_bloom_fpr_calibration",
-    "graph_kcore_hindex",
-    "graph_jaccard_link_prediction",
-    "text_novelty_curve",
-    "ml_nb_text_predictions",  # rows-only
-    "ml_lr_confusion_matrix",  # rows-only
-    "ml_cv_grid_best",  # rows-only
-    "ml_eval_metrics",  # rows-only
-    "ml_nb_relational_twin",
-    "scan_parquet_checksum",
-    "scan_inline_values",
-    "project_compute",
-    "filter_complex",
-    "filter_date_range",
-    "filter_like_regexp",
-    "distinct_segments",
-    "dedup_by_key_keep_first",
-)
-
-# Rotation bookkeeping (authoritative — recomputed each round from
-# union(CORRECTNESS_r0*.json) vs the registry; run
-# `python scripts/rotate_priority.py` to derive the next front block and
-# _ROTATION_BASIS mechanically instead of by hand — hand-maintenance
-# produced the r4 wasted round and the r5 false rows-only claim):
-#   r1: 50 verified (49 oracle + agg_approx_count_distinct rows-only)
-#   r2: a disjoint 50 (49 oracle + sim_ann_ivf_kmeans rows-only)
-#   r3: a disjoint 50 (the scan/fn/TPC-H block)
-#   r4: WASTED — re-verified r3's identical set (_PRIORITY wasn't rotated)
-#   r5: a disjoint 50 — sketches, graphs, datapipe, PQ/JL/Gram, LSH
-#       calibration, map-HOF, streaming twins, rank consumers.
-#   r6 (this file's front block): exactly 50 never-verified oracle-backed
-#       names — the 45 left after r1–r5 (42 carried + 3 r5 additions) plus
-#       the 5 operators ADDED in r6 (incremental near-dup, grid multiprobe
-#       ANN, strict-order funnel, grid recall report, CDC chunk dedup).
-#       CORRECTION (r5 verdict "What's wrong" #3): a prior revision of this
-#       note claimed the rows-only entries "already received [a] rows-only
-#       verdict in r1/r2" — FALSE for 6 of 8. Only agg_approx_count_distinct
-#       (r1) and sim_ann_ivf_kmeans (r2) appear in any CORRECTNESS file; the
-#       ml_* four, agg_hll_mergeable_sketch, and agg_approx_percentile have
-#       never received ANY driver verdict. All 6 spill to r7 (the r6
-#       additions filled the front with oracle-backed names — hash-match
-#       is the stronger verdict, so oracle debt drains first), queued
-#       most-informative-first for r7: ml_nb then ml_lr (M1–M11 have zero
-#       driver verdicts of any kind; the two jointly exercise the whole
-#       tokenize→TF/IDF→fit→predict/confusion pipeline), then ml_cv/
-#       ml_eval (same pipeline, thinner slices), then HLL-merge and
-#       approx-percentile — last because their §2 rows (A3/A7) already
-#       carry oracle hash-matched verdicts (sketch_hll_registers/estimate
-#       r5; percentiles r1, weighted-median/skew-kurtosis/rolling-median
-#       r5).
-#   r7 (this file's front block): the FINAL 48 never-verified names —
-#       38 oracle-backed (the r6-mid additions from graph_kcore_hindex
-#       through scan_schema_evolution_merge), the 4 r7 additions (BM25,
-#       RRF hybrid fusion, the oracle-backed relational NB twin that
-#       finally puts an M7/M10 query under the hash gate, and
-#       temperature-scaled language mixing), and the 6 rows-only spill
-#       (ml_nb/ml_lr/ml_cv/ml_eval, HLL-merge, approx-percentile) —
-#       plus the first 2 post-closure freshness slots (high-risk
-#       families: ngram-Jaccard pair pipeline, weighted-median decimal
-#       aggregate). Derived by
-#       scripts/rotate_priority.py; pinned by
-#       tests/test_oracle_parity.py::test_priority_matches_rotation_script.
-#   r8 (this file's front block): the book closed in r7 (297/297 names
-#       carry a driver verdict, 0 FAILs). Slots 1-7: the seven r8 query
-#       additions (LR scoring/confusion + NB-eval oracle twins, the
-#       BPE merge-loop trainer, the CCNet perplexity split, winnowing
-#       fingerprints + overlap search — never verified by
-#       construction, oracle debt drains first). Then the first full
-#       freshness rotation: the 12 standing high-risk families, then
-#       oldest-verdict-first (the r1 relational core — scan/filter/join/
-#       agg/window — whose verdicts are 7 rounds old). Derived by
-#       scripts/rotate_priority.py against union(r01..r07); pinned by
-#       the rotation-equality test.
-#   r9 (this file's front block): PINNED tier debuts in
-#       scripts/rotate_priority.py (policy tier (1) below made mechanical):
-#       the two r8 repairs whose standing driver verdicts are known-stale
-#       vacuous greens lead, then the seven r8 first-greens re-attest, then
-#       the standing high-risk 12, then oldest-first (the r2 block).
-#       Derived against union(r01..r08); pinned by the rotation-equality
-#       test.
-#   r10 (prior front block): the five r10 additions (BPE decode
-#       round-trip, winnow-search floor, BM25/MMR library routers, the
-#       composed curation pipeline) led and went green on first driver
-#       contact; then high-risk 12, then oldest-first freshness.
-#   r11 (prior front block): ALL 315 names now carry a verdict and
-#       the r10 additions re-attested in r10 itself, so this is the first
-#       PURE freshness block with no debt tier: high-risk 12, then the
-#       r2/r3-verified streaming/scan/fn/TPC-H core (verdicts 8-9 rounds
-#       old). r11 query additions will be re-pasted to the front per
-#       policy tier (1) when they land. Derived against union(r01..r10);
-#       pinned by the rotation-equality test.
-#   r12 (prior front block): the 10 r11 additions all went green on
-#       first driver contact in r11 (325/325 covered, 0 never-verified),
-#       so this is again a PURE freshness block: high-risk 12, then the
-#       oldest-verdict-first round-robin (the r3-r5-era TPC-H/fn/udf/
-#       stream/sim/text core, verdicts 7-9 rounds old, resurfaces).
-#       Derived against union(r01..r11); pinned by the rotation-equality
-#       test.
-#   r13 (prior front block): the 3 r13 additions (scripting compound, the
-#       two watermark ST4 conversions) led per policy, then the two pinned
-#       known-stale names (curate_incremental restructure, gate eager flip),
-#       then high-risk 12 + oldest-first. All 50 went green (CORRECTNESS_r13).
-#   r14 (this file's front block): 335/335 verified, 0 never-verified, 0
-#       active pins (every PINNED entry auto-pruned by its r13 verdict) —
-#       PURE freshness: high-risk 12, then oldest-verdict-first (the
-#       r5-r6-era sketch/graph/datapipe/window/fn core resurfaces).
-#       Derived against union(r01..r13); pinned by the rotation-equality
-#       test. r14 is an OPTIMIZATION round: implementations touched this
-#       round keep their semantics (oracle hash must stay identical), so
-#       policy tier (1) re-attestation happens naturally via this block.
-#   r8+ (post-closure rotation policy): once union(CORRECTNESS) covers every
-#       registered name, repurpose the 50-slot budget as a freshness
-#       rotation — front, in order: (1) any query whose implementation
-#       changed since its last verdict (keep evidence current as code
-#       evolves), (2) the highest-risk families on a standing cycle: the
-#       pair pipelines (minhash/ngram/containment/simhash), the
-#       with_global_rank consumers, the decimal-heavy aggregates
-#       (agg_ols_two_features, agg_weighted_median), then (3) oldest-verdict
-#       -first round-robin over the rest. Update _ROTATION_BASIS in
-#       tests/test_oracle_parity.py whenever the front block is recomputed.
-
-
-def _ordered(items: dict[str, Query]) -> dict[str, Query]:
-    rank = {n: i for i, n in enumerate(_PRIORITY)}
-    insertion = {n: i for i, n in enumerate(items)}
-    names = sorted(items, key=lambda n: (rank.get(n, len(_PRIORITY)), insertion[n]))
-    return {n: items[n] for n in names}
 
 
 def query(
@@ -290,7 +115,7 @@ def _load() -> None:
 
 def all_queries() -> dict[str, Query]:
     _load()
-    return _ordered(_REGISTRY)
+    return dict(_REGISTRY)
 
 
 def query_map() -> dict[str, QueryFn]:

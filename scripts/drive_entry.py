@@ -1,9 +1,13 @@
 #!/usr/bin/env python3
-"""Driver twin (the .claude/skills/verify recipe, committed so rounds
-stop recreating it in /tmp): import __spark_entry__, smoke entry(), then
+"""Oracle sweep over the ``__spark_entry__`` contract: smoke entry(), then
 run every queries()[name] vs oracle_sql()[name] on DuckDB at the given
 sf dir, comparing via tests/compare.assert_frames_match — strictly
-harsher than the driver's hash, so passing here implies passing there.
+harsher than an order-insensitive value hash, so passing here implies
+passing the contract's hash check. An oracle-checked query that returns
+0 rows FAILs as vacuous unless its registry entry carries ``empty_ok``
+(a 0-row match cannot tell a correct empty answer from a dead pipeline);
+the rule is meant for the sf0.01 gate scale, where every other
+oracle-checked query returns rows.
 
 Usage:
     python scripts/drive_entry.py /root/testdata/sf0.01            # full gate-scale drive (~6 min)
@@ -17,10 +21,11 @@ SPARK_GRAFT_DRIVE_CPUS for the sf0.1 sweep.
 """
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -34,8 +39,6 @@ TABLES = (
 
 
 def main() -> int:
-    import os
-
     cpus = os.environ.get("SPARK_GRAFT_DRIVE_CPUS", "8")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -48,6 +51,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as ent
+    from pyspark_for_ebook_classification_spark.plans.registry import all_queries
     from tests.compare import assert_frames_match
 
     n = ent.entry(spark).count()
@@ -63,6 +67,7 @@ def main() -> int:
 
     qs = ent.queries()
     oracles = ent.oracle_sql()
+    registered = all_queries()
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
     fails = []
     for name, fn in qs.items():
@@ -75,6 +80,10 @@ def main() -> int:
                 continue
             odf = con.sql(oracles[name]).df()
             assert_frames_match(sdf, odf, name)
+            if sdf.empty and not registered[name].empty_ok:
+                fails.append(name)
+                print(f"{name}: FAIL — vacuous (0 rows, no empty_ok)")
+                continue
             print(f"{name}: MATCH ({len(sdf)} rows)")
         except Exception as e:  # noqa: BLE001
             fails.append(name)

@@ -6,8 +6,9 @@ Usage:  python scripts/explain_query.py <outdir> <suffix> q1,q2,...
 
 Writes <outdir>/<query>_<suffix>.txt with the UNEXECUTED formatted plan
 (AQE initial plan — the shape evidence: Exchange count, join strategy,
-PushedFilters/ReadSchema, codegen spans, Python eval nodes). The
-executed post-AQE twins live in PLANS.md via scripts/dump_plans.py.
+PushedFilters/ReadSchema, codegen spans, Python eval nodes).
+``plans.explain.executed_plan_string(df)`` runs a query and returns its
+executed post-AQE plan; tests/test_plans.py pins the shapes that matter.
 """
 
 from __future__ import annotations

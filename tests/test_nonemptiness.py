@@ -2,16 +2,15 @@
 1-3): an oracle hash-match on 0 rows cannot distinguish a correct empty
 answer from a dead pipeline. text_bm25_topk shipped exactly that in r7 —
 its df stopword ceiling emptied the workload on the driver's 31-token
-corpus at sf0.01 AND sf0.1, so its driver green, SCALING ratio, and plan
-pin were all evidence about an EmptyRelation. Three layers make the
-class structurally dead (the Generate-recompute-lint treatment):
+corpus at sf0.01 AND sf0.1, so its oracle green and plan pin were both
+evidence about an EmptyRelation. Three layers make the class
+structurally dead (the Generate-recompute-lint treatment):
 
-  1. evidence mining — any oracle-backed query whose LATEST driver
-     verdict recorded spark_rows == 0 and that carries no ``empty_ok``
-     annotation must produce rows NOW at the driver's gate scale
-     (sf0.01). A query that dies after a code change is caught the
-     pytest after the next driver round records it; a query dead at
-     annotation time (the BM25 case) is caught immediately.
+  1. the gate-scale sweep — ``scripts/drive_entry.py`` at sf0.01 fails
+     any oracle-backed query without an ``empty_ok`` annotation that
+     returns 0 rows. It is not a test here because the rule holds only
+     at sf0.01 (four TPC-H queries are empty at the suite's sf0.001), and
+     a full sf0.01 pass costs minutes.
   2. annotation hygiene — ``empty_ok`` is a pinned exceptional list;
      every entry carries a planted-fixture companion test here proving
      the operator emits rows when the data contains what it looks for
@@ -24,8 +23,6 @@ class structurally dead (the Generate-recompute-lint treatment):
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import shutil
 
@@ -39,7 +36,6 @@ from pyspark.sql import functions as F
 from pyspark_for_ebook_classification_spark.plans.registry import all_queries
 
 QUERIES = all_queries()
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: The driver's oracle-gate scale. Guards that pin gate-scale behavior run
 #: here regardless of the suite's SF_DIR (sf0.001 by default) — the whole
@@ -49,14 +45,6 @@ GATE_SF_DIR = "/root/testdata/sf0.01"
 needs_gate_sf = pytest.mark.skipif(
     not os.path.isdir(GATE_SF_DIR), reason="driver gate-scale testdata absent"
 )
-
-
-def _latest_verdicts() -> dict[str, dict]:
-    latest: dict[str, dict] = {}
-    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        for name, v in json.load(open(f)).items():
-            latest[name] = v
-    return latest
 
 
 def test_empty_ok_annotations_are_pinned_and_justified():
@@ -72,32 +60,6 @@ def test_empty_ok_annotations_are_pinned_and_justified():
         assert "test_nonemptiness" in QUERIES[n].empty_ok, (
             f"{n}: empty_ok must cite its companion fixture test"
         )
-
-
-@needs_gate_sf
-def test_no_vacuous_driver_greens(spark):
-    """Mine the CORRECTNESS history: every oracle-backed query whose
-    latest driver verdict recorded 0 rows must either be annotated
-    empty_ok or produce rows at the gate scale today (i.e. the 0-row
-    evidence is stale because the workload was repaired — the r8 BM25
-    state until the driver re-verifies it)."""
-    latest = _latest_verdicts()
-    stale_zero = [
-        n
-        for n, v in latest.items()
-        if n in QUERIES
-        and QUERIES[n].oracle is not None
-        and not QUERIES[n].empty_ok
-        and v.get("spark_rows") == 0
-    ]
-    dead = []
-    for n in stale_zero:
-        if QUERIES[n].fn(spark, GATE_SF_DIR).count() == 0:
-            dead.append(n)
-    assert not dead, (
-        f"vacuously green queries (0 rows at the gate scale, no empty_ok "
-        f"annotation): {dead}"
-    )
 
 
 @needs_gate_sf

@@ -1,22 +1,14 @@
-"""Analytical scale ceilings for the r7 SCALING.md tail (r7 verdict item
-5): multimodal_cdc_chunk_dedup (3.22× under 10× data), window_rolling_corr
-(3.20×), dedup_substring_removal (2.89×), data_importance_resample (2.54×).
-All four are linear pipelines whose measured ratios are fixed-cost
-amortization, not algorithmic growth — so each gets the
+"""Analytical scale ceilings for the queries whose measured sf0.01 -> sf0.1
+wall-time ratio exceeded 2.5x under 10x data: multimodal_cdc_chunk_dedup
+(3.22x), window_rolling_corr (3.20x), dedup_substring_removal (2.89x),
+data_importance_resample (2.54x), and the later entrants each test
+names. All are linear pipelines whose measured ratios were fixed-cost
+amortization, not algorithmic growth: re-timed against a 32-file
+repartitioned copy of the same sf0.1 data, the split scan parallelized
+the single-task map stage and the ratio collapsed. So each gets the
 containment_pair_budget treatment: a conservation/ceiling invariant that
 recomputes BOTH sides from data (pure Python where feasible), pinned so
-any future change that introduces real amplification trips a test instead
-of drifting in SCALING.md.
-
-r11 (verdict task 5): the >2.5× ratios these ceilings were written for are
-now also EMPIRICALLY explained — scripts/scaling_check.py re-times every
->2.5× entrant against a 32-file repartitioned copy of the same sf0.1 data
-(the "Splittable-scan twin" SCALING.md section); the split scan
-parallelizes the single-task map stage and the time collapses, proving the
-ratio was the driver's single-row-group artifact. The entries are retired
-as scale WORRIES; these tests remain as cheap conservation invariants
-(they catch real amplification a future edit could introduce, which the
-split twin would not).
+any future change that introduces real amplification trips a test.
 """
 
 from __future__ import annotations
@@ -149,7 +141,7 @@ def test_dsir_no_amplification(spark, sf_dir):
 
 
 def test_basket_affinity_pair_expansion_bound(spark, sf_dir):
-    """r10 SCALING watch entrant (2.62× under 10× data): basket-pair
+    """r10 scale-ratio entrant (2.62× under 10× data): basket-pair
     expansion is Σ over orders of C(k,2) with k = distinct brands in the
     order — bounded per basket by basket SIZE, and the output is keyed
     by (brand_a, brand_b) whose domain is the fixed brand vocabulary.
@@ -176,7 +168,7 @@ def test_basket_affinity_pair_expansion_bound(spark, sf_dir):
 
 
 def test_substring_spans_coverage_bound(spark, sf_dir):
-    """r10 SCALING watch entrant (2.60×): covered tokens per doc cannot
+    """r10 scale-ratio entrant (2.60×): covered tokens per doc cannot
     exceed the doc's token count (span regions are subsets of the doc),
     and the corpus-wide covered total cannot exceed the corpus token
     count — the ExactSubstr linear-anchor ceiling in its simplest
@@ -202,12 +194,12 @@ def test_substring_spans_coverage_bound(spark, sf_dir):
 
 
 def test_ngram_stage_pair_budget(spark, sf_dir):
-    """r11 SCALING entrant ml_ngram_stage_twin (2.62x under 10x data):
+    """ml_ngram_stage_twin (2.62x under 10x data):
     linear pipeline — total bigram occurrences (pre-df-cut) are EXACTLY
     sum over docs of max(len_filtered - 1, 0), recomputed in pure
     Python, and the declared (df >= 2) output's count mass can never
     exceed that budget. Any future change introducing real pair
-    amplification trips this instead of drifting in SCALING.md."""
+    amplification trips this."""
     import re as _re
 
     from pyspark_for_ebook_classification_spark.ml.queries import _EN_STOPWORDS
@@ -241,7 +233,7 @@ def test_ngram_stage_pair_budget(spark, sf_dir):
 
 
 def test_cv_grid_output_is_grid_bounded(spark, sf_dir):
-    """r11 SCALING entrant ml_cv_grid_relational_twin (2.52x): the
+    """r11 scale-ratio entrant ml_cv_grid_relational_twin (2.52x): the
     output is one row per grid point, each doc is tested exactly once
     per alpha (n_test identical across alphas and <= corpus size), and
     exactly one winner is flagged — the structural bounds that make the
