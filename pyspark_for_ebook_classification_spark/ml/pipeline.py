@@ -74,6 +74,14 @@ def build_text_pipeline(cfg: TextClassifierConfig = TextClassifierConfig()) -> P
     return Pipeline(stages=stages)
 
 
+def _key_hash(key_col: str, seed: int = SEED):
+    """md5(key # seed) of a key column as a non-negative BIGINT (its
+    first 15 hex digits): the split hash of split_train_test and of the
+    CV twin's folds, the same on any layout and in DuckDB."""
+    md5 = F.md5(F.concat_ws("#", F.col(key_col).cast("string"), F.lit(str(seed))))
+    return F.conv(F.substring(md5, 1, 15), 16, 10).cast("bigint")
+
+
 def split_train_test(
     df: DataFrame, weights=(0.8, 0.2), seed: int = SEED, key_col: str = "doc_id"
 ) -> tuple[DataFrame, ...]:
@@ -96,18 +104,7 @@ def split_train_test(
         acc += w
         cuts.append(int(round(acc / total * 10000)))
     cuts[-1] = 10000  # close the last band against rounding drift
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("#", F.col(key_col).cast("string"), F.lit(str(seed)))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10000
-    )
+    bucket = _key_hash(key_col, seed) % 10000
     lo = 0
     out = []
     for hi in cuts:

@@ -9,13 +9,14 @@ of the feature engineering is fully oracle-checked in operators/textops.py
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import NamedTuple, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_for_ebook_classification_spark.ml.pipeline import (
     TextClassifierConfig,
+    _key_hash,
     evaluate,
     fit_text_classifier,
     split_train_test,
@@ -130,20 +131,25 @@ _NB_CUT = 8000  # md5 bucket < 8000 -> train (the split_train_test 0.8 band)
 _NB_SEED = 42
 
 
-def _with_n_train(n_docs: DataFrame) -> DataFrame:
-    """Append ``n_train`` = sum(n_docs) to the per-label doc counts
-    (lang, n_docs). A window over an empty partition spec would move
-    every row to one partition and log a WindowExec warning per call;
-    a crossJoin with a separate one-row sum re-reads the training data,
-    because the scoring join's inferred ``lang IS NOT NULL`` reaches only
-    the per-label branch, so the two no longer share an exchange. One
-    global aggregate that carries the label rows and their sum, then
-    unnests them, reads the training data once. NULL-label docs count
+def _with_n_train(n_docs: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame:
+    """Append ``n_train`` = sum(n_docs) per group to the per-label doc
+    counts (*group_cols, lang, n_docs). A window over an empty partition
+    spec would move every row to one partition and log a WindowExec
+    warning per call; a crossJoin with a separate one-row sum re-reads the
+    training data, because the scoring join's inferred ``lang IS NOT
+    NULL`` reaches only the per-label branch, so the two no longer share
+    an exchange. One aggregate per group that carries the label rows and
+    their sum, then unnests them, reads the training data once; with no
+    group columns it is one global aggregate. NULL-label docs count
     toward n_train, as in the oracle's COUNT(*) over the train split."""
-    return n_docs.agg(
-        F.collect_list(F.struct("lang", "n_docs")).alias("labels"),
-        F.sum("n_docs").alias("n_train"),
-    ).select(F.inline("labels"), "n_train")
+    return (
+        n_docs.groupBy(*group_cols)
+        .agg(
+            F.collect_list(F.struct("lang", "n_docs")).alias("labels"),
+            F.sum("n_docs").alias("n_train"),
+        )
+        .select(*group_cols, F.inline("labels"), "n_train")
+    )
 
 
 #: the NB train+score CTE chain up to the per-doc argmax; shared by
@@ -547,7 +553,7 @@ def ml_eval_relational_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on first computation) — r14: the class spine, the per-class count
     # pass and the totals aggregate are three independent consumers, and
     # without a cut point each re-planned the WHOLE NB scoring pipeline
-    # (34 shuffles in the r13 PLANS dump; 3 scoring passes at scale).
+    # (34 shuffles in the r13 plan; 3 scoring passes at scale).
     # Production evaluates metrics over written-out predictions anyway.
     preds = ml_nb_relational_twin(spark, sf_dir).localCheckpoint(eager=False)
     spine = preds.select(F.col("true_lang").alias("lang")).distinct()
@@ -899,140 +905,39 @@ _CV_TWIN_SQL = f"""
     oracle=_CV_TWIN_SQL,
 )
 def ml_cv_grid_relational_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M11 under the exact-value hash gate (the NB-twin pattern applied
-    to MODEL SELECTION): 3-fold cross-validation over a Lidstone
-    smoothing grid alpha in {0.5, 1.0, 2.0}, computed WITHOUT loops or
-    unrolling — folds and alphas are DATA (two tiny literal tables
-    cross-joined into the model/score keys), so one declarative plan
-    trains 3 fold-models and scores all 3x3
-    (fold, alpha) cells at once. Per cell: the textbook multinomial NB of
-    ml_nb_relational_twin generalized to Lidstone — likelihood
-    log((c + alpha)/(tot + alpha*V)) over the fold's train vocab, argmax
-    with cand-lang tie-break. Pooled CV accuracy per alpha (each doc is
-    tested exactly once, in its own fold) as INTEGER n_test/n_correct
-    plus the portable floor-rounded ratio; the winning alpha flagged by
-    (n_correct DESC, alpha ASC). The MLlib CrossValidator queries
-    (ml_cv_grid_best) remain the production training surface, rows-only
-    by design; this twin pins the CV math itself — fold assignment,
-    per-fold fitting statistics, grid scoring, metric pooling, winner
-    selection — and a pure-Python recount is the third engine
-    (tests/test_ml.py::test_cv_grid_twin_matches_pure_python).
-
-    Determinism: the same md5(doc_id#seed) fold hash as split_train_test
-    (layout/retry-invariant at any scale); alphas 0.5/1.0/2.0 exactly
-    representable; each log factor rounds to 6dp pre-sum and the per-cell
-    sum accumulates in DECIMAL(28,6) — the NB twin's discipline, so
-    scores are bit-identical cross-engine.
-
-    Scale shape: model tables are (fold x lang x vocab)-sized — 3x
-    the NB twin's, still vocabulary-bounded -> BROADCAST; the corpus-sized
-    work is one tokenize+explode into fold-keyed partial aggs (each token
-    contributes to k-1 train folds — a constant-factor expansion,
-    not a shuffle multiplier), and scoring is the same broadcast probe as
-    the NB twin with (fold, alpha) widening only the bounded side. At
-    100 TB, grid size multiplies broadcast bytes, never corpus traffic."""
-    d = load(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "#", F.col("doc_id").cast("string"), F.lit(str(_NB_SEED))
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % _CV_FOLDS
-    )
-    docs = d.select(
-        "doc_id",
-        "lang",
-        F.filter(F.split("text", " "), lambda t: t != "").alias("tokens"),
-        bucket.alias("fold"),
-    )
+    """M11 under the exact-value hash gate: 3-fold cross-validation over
+    a Lidstone smoothing grid alpha in {0.5, 1.0, 2.0}, with folds and
+    alphas as data. The md5(doc_id#42) hash of split_train_test assigns
+    each doc a fold; one ``nb_fit`` keyed by fold trains the three
+    fold-models, and one ``nb_score`` keyed by (fold, alpha) scores every
+    doc in its own fold at every alpha. Pooled accuracy per alpha is
+    INTEGER n_test/n_correct plus the portable floor-rounded ratio; the
+    winning alpha is flagged by (n_correct DESC, alpha ASC). The MLlib
+    CrossValidator query (ml_cv_grid_best) stays rows-only; a pure-Python
+    recount is the third engine
+    (tests/test_ml.py::test_cv_grid_twin_matches_pure_python)."""
+    fold = _key_hash("doc_id", _NB_SEED) % _CV_FOLDS
+    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text", fold.alias("fold"))
     folds = spark.createDataFrame([(f,) for f in range(_CV_FOLDS)], "f bigint")
-    alphas = spark.createDataFrame([(a,) for a in _CV_ALPHAS], "alpha double")
-    tr = docs.crossJoin(F.broadcast(folds)).filter(F.col("fold") != F.col("f"))
-    tr_tok = tr.select("f", "lang", F.explode("tokens").alias("token"))
-    # cnt_lt is (fold x lang x vocab)-bounded — checkpoint it once and
-    # DERIVE the other training statistics from it instead of re-planning
-    # the corpus tokenize+explode chain per aggregate (r15: the executed
-    # plan paid 5 corpus scans / 4 explodes; tot_l is the exact row total
-    # sum(c) per (f, lang), vocab the distinct (f, token) set — integer
-    # identities, bit-identical to the direct corpus aggregates).
-    cnt_lt = (
-        tr_tok.groupBy("f", "lang", "token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    tot_l = cnt_lt.groupBy("f", "lang").agg(F.sum("c").alias("tot"))
-    vocab = cnt_lt.select("f", "token").distinct()
-    vsize = vocab.groupBy("f").agg(F.count(F.lit(1)).alias("v"))
-    w_f = Window.partitionBy("f")
-    prior = (
-        tr.groupBy("f", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .withColumn("n_train", F.sum("n_docs").over(w_f))
-    )
-    te_tok = (
-        docs.select(
-            F.col("fold").alias("f"),
-            "doc_id",
-            F.col("lang").alias("true_lang"),
-            F.explode("tokens").alias("token"),
-        )
-        .join(vocab, ["f", "token"])
-        .groupBy("f", "doc_id", "true_lang", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    log_lik = F.round(
-        F.log(
-            (F.coalesce(F.col("c"), F.lit(0)) + F.col("alpha"))
-            / (F.col("tot") + F.col("alpha") * F.col("v"))
-        ),
-        6,
-    )
-    log_prior = F.round(F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6)
-    scored = (
-        te_tok.crossJoin(F.broadcast(alphas))
-        .join(
-            F.broadcast(prior.select("f", F.col("lang").alias("cand_lang"), "n_docs", "n_train")),
-            "f",
-        )
-        .join(
-            F.broadcast(tot_l.select("f", F.col("lang").alias("cand_lang"), "tot")),
-            ["f", "cand_lang"],
-        )
-        .join(F.broadcast(vsize), "f")
-        .join(
-            cnt_lt.select("f", F.col("lang").alias("cand_lang"), "token", "c"),
-            ["f", "cand_lang", "token"],
-            "left",
-        )
-        .groupBy("f", "alpha", "doc_id", "true_lang", "cand_lang")
-        .agg(
-            (
-                F.first(log_prior).cast("decimal(28,6)")
-                + F.sum((F.col("tf") * log_lik).cast("decimal(28,6)"))
-            ).alias("score")
-        )
-    )
-    w_p = Window.partitionBy("f", "alpha", "doc_id").orderBy(
-        F.desc("score"), F.asc("cand_lang")
-    )
-    pred = (
-        scored.withColumn("rn", F.row_number().over(w_p))
-        .filter(F.col("rn") == 1)
-        .select("alpha", "true_lang", F.col("cand_lang").alias("pred_lang"))
+    alphas = F.broadcast(spark.createDataFrame([(a,) for a in _CV_ALPHAS], "alpha double"))
+    train = docs.crossJoin(F.broadcast(folds)).filter(F.col("fold") != F.col("f"))
+    model = nb_fit(train, group_cols=("f",))
+    test = docs.select(
+        F.col("fold").alias("f"),
+        F.struct("doc_id", F.col("lang").alias("true_lang")).alias("key"),
+        "text",
+    ).crossJoin(alphas)
+    pred = nb_score(
+        NBModel(model.table.crossJoin(alphas)),
+        test,
+        alpha=F.col("alpha"),
+        id_col="key",
+        group_cols=("f", "alpha"),
     )
     acc = pred.groupBy("alpha").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_test"),
         F.sum(
-            F.when(F.col("pred_lang") == F.col("true_lang"), 1).otherwise(0)
+            F.when(F.col("pred_lang") == F.col("key.true_lang"), 1).otherwise(0)
         )
         .cast("bigint")
         .alias("n_correct"),
@@ -1126,11 +1031,11 @@ def tfidf_pipeline_features(
 class NBModel(NamedTuple):
     """``nb_fit``'s model: one (label x vocabulary)-bounded table."""
 
-    #: (cand_lang, token, c, tot, v, n_docs, n_train): one row per
-    #: (label, training-vocabulary token); c is the token's training count
-    #: under that label (0 when the pair never occurs), tot the label's
-    #: token total, v the vocabulary size, n_docs the label's doc count and
-    #: n_train the training doc count
+    #: (*group_cols, cand_lang, token, c, tot, v, n_docs, n_train): one row
+    #: per (group, label, training-vocabulary token); c is the token's
+    #: training count under that label (0 when the pair never occurs), tot
+    #: the label's token total, v the vocabulary size, n_docs the label's
+    #: doc count and n_train the training doc count, each within its group
     table: DataFrame
 
 
@@ -1141,7 +1046,13 @@ def _nb_tokens(text_col: str):
     return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
 
 
-def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text") -> NBModel:
+def nb_fit(
+    train: DataFrame,
+    *,
+    label_col: str = "lang",
+    text_col: str = "text",
+    group_cols: Sequence[str] = (),
+) -> NBModel:
     """Build step of relational multinomial Naive Bayes: train on
     (label_col, text_col) and return the small ``NBModel`` that
     ``nb_score`` scores against. Tokens are the non-empty pieces of a
@@ -1152,6 +1063,11 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     one table once. Labels are the non-NULL training labels; the
     vocabulary is every training token, NULL-label docs included, and
     NULL-label docs count toward n_train, as in the oracle.
+
+    ``group_cols`` fits one independent model per value of those train
+    columns in the same pass (the CV twin's folds): every count,
+    vocabulary, label and n_train statistic is computed per group and the
+    table carries the group columns. With none, one model is fitted.
 
     Plan shape (r15's single training pass): one checkpointed (label x
     vocab)-bounded count table feeds the vocabulary and every per-label
@@ -1170,27 +1086,32 @@ def nb_fit(train: DataFrame, *, label_col: str = "lang", text_col: str = "text")
     backs it; after ``unpersist()``, ``spark.catalog.clearCache()`` or a
     re-cache it builds a fresh one, and an unpersisted ``train`` is never
     memoized. Call nb_fit directly to hold a model yourself."""
-    require_columns("nb_fit", "train", train, (label_col, text_col))
-    tr = train.select(F.col(label_col).alias("lang"), _nb_tokens(text_col).alias("tokens"))
+    g = list(group_cols)
+    require_columns("nb_fit", "train", train, (*g, label_col, text_col))
+    tr = train.select(*g, F.col(label_col).alias("lang"), _nb_tokens(text_col).alias("tokens"))
     counts = (
-        tr.select("lang", F.explode("tokens").alias("token"))
-        .groupBy("lang", "token")
+        tr.select(*g, "lang", F.explode("tokens").alias("token"))
+        .groupBy(*g, "lang", "token")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
     )
-    vocab = counts.select("token").distinct().localCheckpoint(eager=False)
-    per_label = counts.groupBy("lang").agg(F.sum("c").alias("tot")).crossJoin(
-        vocab.agg(F.count(F.lit(1)).alias("v"))
+    vocab = counts.select(*g, "token").distinct().localCheckpoint(eager=False)
+    # a "cross" join on the group columns is an equi-join, and with none
+    # it plans exactly as crossJoin (PySpark rejects an empty key list)
+    on_groups = g or None
+    per_label = counts.groupBy(*g, "lang").agg(F.sum("c").alias("tot")).join(
+        vocab.groupBy(*g).agg(F.count(F.lit(1)).alias("v")), on_groups, "cross"
     )
     labels = (
-        _with_n_train(tr.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
-        .join(per_label, "lang")
+        _with_n_train(tr.groupBy(*g, "lang").agg(F.count(F.lit(1)).alias("n_docs")), g)
+        .join(per_label, [*g, "lang"])
         .localCheckpoint(eager=False)
     )
     table = (
-        labels.crossJoin(vocab)
-        .join(counts, ["lang", "token"], "left")
+        labels.join(vocab, on_groups, "cross")
+        .join(counts, [*g, "lang", "token"], "left")
         .select(
+            *g,
             F.col("lang").alias("cand_lang"),
             "token",
             F.coalesce(F.col("c"), F.lit(0)).alias("c"),
@@ -1207,10 +1128,11 @@ def nb_score(
     model: NBModel,
     test: DataFrame,
     *,
-    alpha: float = 1.0,
+    alpha: float | Column = 1.0,
     id_col: str = "doc_id",
     label_col: str = "lang",
     text_col: str = "text",
+    group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Score step of relational multinomial Naive Bayes: one row per
     scoreable doc of ``test`` (id_col, text_col) as (id_col,
@@ -1218,8 +1140,16 @@ def nb_score(
     ``model`` (``nb_fit``'s), so one model serves any number of requests
     without retraining: ``nb_classify`` passes the model it keeps for a
     persisted train until that train's cache entry changes (see nb_fit).
-    Raises ValueError when ``alpha`` <= 0 or when the model or ``test``
-    lacks its expected columns.
+    Raises ValueError when a numeric ``alpha`` is <= 0 or when the model
+    or ``test`` lacks its expected columns.
+
+    ``group_cols`` scores each test row against the model rows of its own
+    group: the model table and ``test`` both carry those columns, the
+    join is on (*group_cols, token), the argmax is per (*group_cols, doc)
+    and the output leads with the group columns. ``alpha`` may be a
+    Column over the group columns, so a smoothing grid is data (the CV
+    twin crosses its model and test docs with an alpha table and groups
+    by it).
 
     Math: prior log(n_c/n_train), likelihood log((c + alpha)/(tot_c +
     alpha·V)) over the train vocab, each log factor rounded to 6
@@ -1234,31 +1164,27 @@ def nb_score(
     it, so the per-(doc, token) tf aggregate, the per-(doc, label) score
     aggregate and the per-doc argmax window all run behind that one
     exchange. Any other model table's join is the planner's pick."""
-    if alpha <= 0:
+    if not isinstance(alpha, Column) and alpha <= 0:
         raise ValueError(f"nb_score: need alpha > 0, got {alpha}")
-    require_columns("nb_score", "model.table", model.table, _NB_MODEL_COLS)
-    require_columns("nb_score", "test", test, (id_col, text_col))
+    g = list(group_cols)
+    require_columns("nb_score", "model.table", model.table, (*g, *_NB_MODEL_COLS))
+    require_columns("nb_score", "test", test, (*g, id_col, text_col))
     table = model.table
-    te = test.select(F.col(id_col).alias("doc_id"), _nb_tokens(text_col).alias("tokens"))
+    te = test.select(*g, F.col(id_col).alias("doc_id"), _nb_tokens(text_col).alias("tokens"))
     if broadcastable(table):
         table = F.broadcast(table)
-        te = te.repartition("doc_id")
+        te = te.repartition(*g, "doc_id")
     te_tok = (
-        te.select("doc_id", F.explode("tokens").alias("token"))
-        .groupBy("doc_id", "token")
+        te.select(*g, "doc_id", F.explode("tokens").alias("token"))
+        .groupBy(*g, "doc_id", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    log_lik = F.round(
-        F.log(
-            (F.col("c") + F.lit(float(alpha)))
-            / (F.col("tot") + F.lit(float(alpha)) * F.col("v"))
-        ),
-        6,
-    )
+    a = alpha if isinstance(alpha, Column) else F.lit(float(alpha))
+    log_lik = F.round(F.log((F.col("c") + a) / (F.col("tot") + a * F.col("v"))), 6)
     log_prior = F.round(F.log(F.col("n_docs") / F.col("n_train").cast("double")), 6)
     scored = (
-        te_tok.join(table, "token")
-        .groupBy("doc_id", "cand_lang")
+        te_tok.join(table, [*g, "token"])
+        .groupBy(*g, "doc_id", "cand_lang")
         .agg(
             (
                 F.first(log_prior).cast("decimal(28,6)")
@@ -1266,11 +1192,12 @@ def nb_score(
             ).alias("score")
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("cand_lang"))
+    w = Window.partitionBy(*g, "doc_id").orderBy(F.desc("score"), F.asc("cand_lang"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
+            *g,
             F.col("doc_id").alias(id_col),
             F.col("cand_lang").alias(f"pred_{label_col}"),
             F.col("score").cast("double").alias("nb_log_score"),
@@ -1346,10 +1273,10 @@ def ml_nb_library_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME CTE chain the add-one twin uses, at 0.5 (``_nb_ctes`` is
     shared, so twin and library oracle cannot drift).
 
-    Scale shape — nb_classify's: the model is two vocabulary-sized
-    broadcast tables plus two scalars; scoring is one map-side join over
-    the test token stream + a (doc, label)-keyed partial agg; training
-    is one token-keyed combine. No corpus self-join."""
+    Scale shape — nb_classify's: the model is one (label x
+    vocabulary)-sized table; scoring is one join over the test token
+    stream + a (doc, label)-keyed partial agg; training is one
+    token-keyed combine. No corpus self-join."""
     train, test = split_train_test(load(spark, sf_dir, "documents"))
     return nb_classify(train, test, alpha=_LIB_NB_ALPHA)
 

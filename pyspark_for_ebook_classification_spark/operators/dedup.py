@@ -161,69 +161,14 @@ def _lcg_seeds(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def _minhash_signature(
-    df: DataFrame, num_hashes: int = N_HASHES, shingle_k: int = 3
-) -> DataFrame:
-    """doc_id → one min-md5 per seed over the shingle set. Single explode +
-    single groupBy; the signature mins are computed side by side in one
-    partial aggregation. Defaults reproduce the registered 12-hash
-    trigram pipeline bit-for-bit; num_hashes/shingle_k parameterize the
-    production ``neardup_dedup`` entry.
-
-    The repartition matters: the doc table arrives as few input splits
-    (one small parquet file locally), but explode amplifies work ~50×
-    (shingles × num_hashes hashes) — without it the whole minhash stage
-    runs in one task. Same principle at 100 TB: repartition BEFORE
-    compute amplification, sized to the amplified volume, not the input
-    volume.
-    """
-    lcg_a, lcg_b = _lcg_seeds(num_hashes)
-    toks = (
-        df.repartition(_fanout_partitions(df), "doc_id")
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
+def _shingle_sets(d: DataFrame, shingle_k: int = 3) -> DataFrame:
+    """(doc_id, shingles) for the docs of a (doc_id, text) frame with at
+    least one token: the MinHash item sets (see _shingles_expr)."""
+    return (
+        d.select("doc_id", _raw_tokens_expr().alias("tokens"))
         .filter(F.size("tokens") >= 1)
+        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles"))
     )
-    sh = toks.select(
-        "doc_id", F.explode(_shingles_expr_k(shingle_k)).alias("shingle")
-    )
-    hm = sh.select(
-        "doc_id",
-        (
-            F.expr("CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)")
-            % MERSENNE_P
-        ).alias("hm"),
-    )
-    aggs = [
-        F.min((F.lit(lcg_a[i]) * F.col("hm") + F.lit(lcg_b[i])) % MERSENNE_P).alias(
-            f"h{i}"
-        )
-        for i in range(num_hashes)
-    ]
-    return hm.groupBy("doc_id").agg(*aggs)
-
-
-def _bands(
-    sig: DataFrame, n_bands: int = N_BANDS, band_rows: int = BAND_ROWS
-) -> DataFrame:
-    """Signature → (doc_id, band_id, band_hash) rows."""
-    band_frames = [
-        sig.select(
-            "doc_id",
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "|",
-                *[
-                    F.col(f"h{b * band_rows + r}").cast("string")
-                    for r in range(band_rows)
-                ],
-            ).alias("band_hash"),
-        )
-        for b in range(n_bands)
-    ]
-    out = band_frames[0]
-    for extra in band_frames[1:]:
-        out = out.unionByName(extra)
-    return out
 
 
 def _sql_sig_chain(prefix: str = "", doc_filter: str = "") -> str:
@@ -1073,14 +1018,14 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether N_HASHES is sized right for the dedup threshold (stddev ≈
     sqrt(j(1-j)/12) ≈ 0.14 at j=0.5 — visible in the data, and the
     reason the LSH stage verifies candidates with exact Jaccard instead
-    of trusting the estimate). Signatures are computed once (12 mins in
-    one partial agg) and joined to the pair list — no per-pair signature
-    recomputation."""
+    of trusting the estimate). Signatures are computed once (12 array
+    mins per doc, ``_minhash_cols``) and joined to the pair list — no
+    per-pair signature recomputation."""
     pairs = _ngram_pairs(spark, sf_dir).select(
         "doc_a", "doc_b", "jac_raw"
     ).localCheckpoint(eager=True)
     # signatures only for pair PARTICIPANTS: the pair set is tiny relative
-    # to the corpus, so a semi-join before the signature explode makes the
+    # to the corpus, so a semi-join before the signature stage makes the
     # SIGNATURE stage sub-second at sf0.1 (whole query 10.8s -> 5.8s; the
     # remainder is the ground-truth pair stage itself) — signatures on
     # demand, the calibration-job dataflow
@@ -1094,7 +1039,11 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # columns differently, so their broadcast subtrees are not
     # canonically identical and ReuseExchange cannot dedupe them — each
     # side re-ran the scan→shingle→md5 pipeline. Pair-member-sized.
-    sig = _minhash_signature(docs).localCheckpoint(eager=False)
+    sig = (
+        _minhash_cols(_shingle_sets(docs.repartition(_fanout_partitions(docs), "doc_id")))
+        .drop("shingles")
+        .localCheckpoint(eager=False)
+    )
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_HASHES)]
     )
@@ -1158,9 +1107,7 @@ def dedup_lsh_candidate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
-    cand = _lsh_candidate_pairs(
-        _bands(_minhash_signature(load(spark, sf_dir, "documents")))
-    )
+    cand = _lsh_candidate_pairs(_band_rows(_shingle_sig(load(spark, sf_dir, "documents"))))
     hit = F.when(F.col("c_a").isNotNull(), 1).otherwise(0)
     joined = truth.join(
         cand.select(
@@ -1428,8 +1375,8 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape — the production dataflow this compresses: the standing
     corpus's band index is AT REST (written once, bucketed on
     (band_id, band_hash) via sources/io.write_bucketed), so a daily
-    batch computes signatures for ITSELF only (one explode + one partial
-    agg over ~1e-3 of the corpus) and equi-joins the band index with
+    batch computes signatures for ITSELF only (one projection over
+    ~1e-3 of the corpus) and equi-joins the band index with
     zero corpus-side shuffle; candidate verification joins shingle
     arrays for candidate PARTICIPANTS only (semi-join before the array
     build, the dedup_minhash_estimate_error discipline). Here both
@@ -1441,20 +1388,13 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition."""
     d = load(spark, sf_dir, "documents")
     is_batch = F.col("doc_id") % 4 == 0
-    pairs = _lsh_candidate_pairs(_bands(_minhash_signature(d)))
+    pairs = _lsh_candidate_pairs(_band_rows(_shingle_sig(d)))
     # candidate pairs are bucket-cap-bounded (tiny next to the corpus);
     # pin ONE materialization so the signature/banding pipeline runs
-    # once. Honest A/B (same session, bench harness): WITHOUT the
-    # checkpoint the static plan carries 24 Exchanges (vs 4 in
-    # dedup_minhash_lsh) but AQE's ReuseExchange dedups them at runtime
-    # (4 ReusedExchange nodes in the executed plan) and wall time is a
-    # wash (~3 s either way at sf0.01/0.1 under host noise). The
-    # checkpoint is kept for DETERMINISM of cost, not speed: reuse is a
+    # once. Exchange reuse would usually dedupe it too, but reuse is a
     # best-effort optimizer rewrite that a branch-local filter pushdown
-    # silently breaks (measured in sim_hard_negative_mining), while the
-    # checkpoint guarantees the expensive stage runs once — the
-    # dedup_minhash_estimate_error discipline, bounded because pairs
-    # are candidate-sized, never corpus-sized.
+    # silently breaks (measured in sim_hard_negative_mining); the
+    # checkpoint keeps the cost deterministic.
     cross = (
         pairs.filter((F.col("doc_a") % 4 == 0) != (F.col("doc_b") % 4 == 0))
         .select(
@@ -1475,12 +1415,8 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle arrays for candidate PARTICIPANTS only, materialized once
     # (joined twice below; participant-bounded, so the checkpoint is
     # candidate-sized, never corpus-sized)
-    arrays = (
-        d.join(members, "doc_id", "left_semi")
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr().alias("shingles"))
-        .localCheckpoint(eager=True)
+    arrays = _shingle_sets(d.join(members, "doc_id", "left_semi")).localCheckpoint(
+        eager=True
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     jac = inter.cast("double") / (
@@ -2014,8 +1950,11 @@ def dedup_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one (config, band, hash)-keyed partial aggregate feeds a
     5-row summary. The only double is the threshold (libm pow, rounded
     per contract)."""
-    sig = _minhash_signature(load(spark, sf_dir, "documents")).localCheckpoint(
-        eager=True
+    d = load(spark, sf_dir, "documents")
+    sig = (
+        _minhash_cols(_shingle_sets(d.repartition(_fanout_partitions(d), "doc_id")))
+        .drop("shingles")
+        .localCheckpoint(eager=True)
     )
     structs = []
     for nb, r in _SWEEP_CONFIGS:
@@ -2119,30 +2058,28 @@ def neardup_pairs(
         raise ValueError(f"neardup_pairs: need shingle_k >= 1, got {shingle_k}")
     d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     bsig = _shingle_sig(d, shingle_k, num_hashes, bands).localCheckpoint(eager=False)
-    cand = _sig_candidate_pairs(bsig, bands, max_bucket)
+    cand = _lsh_candidate_pairs(_band_rows(bsig, bands), max_bucket=max_bucket)
     return _verified_pairs(bsig.select("doc_id", "shingles"), cand, threshold)
 
 
-def _shingle_sig(d: DataFrame, shingle_k: int, num_hashes: int, bands: int) -> DataFrame:
+def _shingle_sig(
+    d: DataFrame, shingle_k: int = 3, num_hashes: int = N_HASHES, bands: int = N_BANDS
+) -> DataFrame:
     """(doc_id, shingles, b0..b{bands-1}) for the non-empty docs of a
     (doc_id, text) frame: ``_gate_sig_cols`` over the shingle sets,
-    repartitioned before the ~50× shingle/hash amplification exactly
-    like _minhash_signature. Its band hashes are bit-identical to
-    _minhash_signature+_bands', so candidate pairs equal the explode
-    form's."""
+    repartitioned by doc id before the ~50× shingle/hash amplification.
+    The doc table arrives as few input splits, so without it the whole
+    signature stage would run in one task (see _fanout_partitions)."""
     return _gate_sig_cols(
-        d.repartition(_fanout_partitions(d), "doc_id")
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles")),
+        _shingle_sets(d.repartition(_fanout_partitions(d), "doc_id"), shingle_k),
         num_hashes=num_hashes,
         bands=bands,
     )
 
 
-def _sig_candidate_pairs(bsig: DataFrame, bands: int, max_bucket: int) -> DataFrame:
-    """(doc_a < doc_b) candidate pairs from a ``_gate_sig_cols`` frame's
-    b0..b{bands-1} band hashes, bucketed by ``_lsh_candidate_pairs``."""
+def _band_rows(bsig: DataFrame, bands: int = N_BANDS) -> DataFrame:
+    """(doc_id, band_id, band_hash) rows of a ``_gate_sig_cols`` frame's
+    b0..b{bands-1} band hashes: the input of ``_lsh_candidate_pairs``."""
     band_frames = [
         bsig.select(
             "doc_id", F.lit(b).alias("band_id"), F.col(f"b{b}").alias("band_hash")
@@ -2152,7 +2089,7 @@ def _sig_candidate_pairs(bsig: DataFrame, bands: int, max_bucket: int) -> DataFr
     banded = band_frames[0]
     for extra in band_frames[1:]:
         banded = banded.unionByName(extra)
-    return _lsh_candidate_pairs(banded, max_bucket=max_bucket)
+    return banded
 
 
 def _verified_pairs(shingled: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
@@ -2756,9 +2693,9 @@ def curate_incremental(
     bucket cap, exactly the artifact production keeps at rest — and
     within-batch clusters run ``neardup_dedup``'s verify+cluster tail
     (``_neardup_cluster``) over the SAME batch signature pass the gate
-    probe uses (r14: one MinHash chain over the batch, not two; the
-    shared band hashes are bit-identical to ``_bands``', so candidate
-    pairs are unchanged), batch-sized cap as before. A batch doc is
+    probe uses (r14: one MinHash chain over the batch, not two; its
+    band rows feed ``_lsh_candidate_pairs`` as in ``neardup_pairs``),
+    batch-sized cap as before. A batch doc is
     admitted iff no member of its within-batch cluster has a verified
     corpus contact and it is the cluster's minimum member (corpus wins;
     keep-first within the batch). Equivalent to connected components
@@ -2834,15 +2771,14 @@ def curate_incremental(
     # Near stage, index-at-rest: corpus contact via the streamable gate
     # against the standing banded index (static-side cap — production
     # builds this once). r14 (guide §2.3 — compute the proxy once): the
-    # batch's MinHash signatures are computed ONE time (_gate_sig_cols,
-    # repartitioned before the ~50× shingle/hash amplification exactly
-    # like _minhash_signature) and shared by BOTH near-stage paths — the
-    # gate probe, and the within-batch clustering, whose band hashes are
-    # the identical concat_ws('|') strings _bands would produce (pinned
-    # bit-identical in _gate_sig_cols' docstring), so the candidate
-    # pairs are unchanged and neardup_dedup's verify+cluster tail runs
-    # as-is via _neardup_cluster. Previously neardup_dedup recomputed
-    # the whole tokenize→shingle→md5 chain on the same batch.
+    # batch's MinHash signatures are computed ONE time (_shingle_sig,
+    # repartitioned before the ~50× shingle/hash amplification) and
+    # shared by BOTH near-stage paths — the gate probe, and the
+    # within-batch clustering, whose candidates come from the same band
+    # hashes through _band_rows, exactly as in neardup_pairs, so
+    # neardup_dedup's verify+cluster tail runs as-is via
+    # _neardup_cluster. Previously neardup_dedup recomputed the whole
+    # tokenize→shingle→md5 chain on the same batch.
     index = gate_static_index(
         c,
         num_hashes=num_hashes,
@@ -2861,7 +2797,7 @@ def curate_incremental(
     clusters = _neardup_cluster(
         surv_e.select("doc_id"),
         bsig.select("doc_id", "shingles"),
-        _sig_candidate_pairs(bsig, bands, max_bucket),
+        _lsh_candidate_pairs(_band_rows(bsig, bands), max_bucket=max_bucket),
         neardup_threshold,
     ).select("doc_id", "cluster_id", "keep")
     contam = clusters.join(hit, "doc_id").select("cluster_id").distinct()
@@ -2952,32 +2888,14 @@ def _sql_incremental_gate() -> str:
     """
 
 
-def _gate_sig_cols(
-    df: DataFrame, *, num_hashes: int = N_HASHES, bands: int = N_BANDS
-) -> DataFrame:
-    """Projection-only MinHash: shingles → per-shingle md5 hash array →
-    the signature mins as COLUMNS, with the band hashes — no explode,
-    no groupBy, so the identical expression runs on a batch frame AND
-    on a Structured Streaming frame (streaming aggregations cannot
-    chain, but projections always can). Bit-identical to
-    _minhash_signature's explode+groupBy form (same md5/LCG math; the
-    min over an array equals the min over grouped rows). Defaults
-    reproduce the registered 12-hash / 2-band layout; the parameters
-    exist for ``curate_incremental``'s pass-through banding.
-
-    Validation mirrors neardup_dedup's (r12 ADVICE): a non-divisible
-    (num_hashes, bands) pair would silently drop the trailing hash rows
-    from every band, so standalone gate callers (gate_static_index,
-    dedup_incremental_gate) mis-band without an error — raise instead."""
-    if num_hashes < 1 or bands < 1:
-        raise ValueError(
-            f"_gate_sig_cols: need num_hashes >= 1 and bands >= 1, got ({num_hashes}, {bands})"
-        )
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"_gate_sig_cols: bands ({bands}) must divide num_hashes ({num_hashes})"
-        )
-    band_rows = num_hashes // bands
+def _minhash_cols(df: DataFrame, num_hashes: int = N_HASHES) -> DataFrame:
+    """``df`` plus the MinHash signature h0..h{num_hashes-1} of its
+    ``shingles`` array as columns: per-shingle md5 parsed to a BIGINT,
+    then per seed the min over the array of (A_i·h + B_i) mod p (the
+    md5/LCG math of the oracle's ``_sql_sig_chain``). Projection only —
+    no explode, no groupBy — so the identical expression runs on a batch
+    frame AND on a Structured Streaming frame (streaming aggregations
+    cannot chain, but projections always can)."""
     lcg_a, lcg_b = _lcg_seeds(num_hashes)
     out = df.withColumn(
         "hmarr",
@@ -2993,6 +2911,32 @@ def _gate_sig_cols(
                 f"array_min(transform(hmarr, x -> ({lcg_a[i]} * x + {lcg_b[i]}) % {MERSENNE_P}))"
             ),
         )
+    return out.drop("hmarr")
+
+
+def _gate_sig_cols(
+    df: DataFrame, *, num_hashes: int = N_HASHES, bands: int = N_BANDS
+) -> DataFrame:
+    """``df`` (with a ``shingles`` array) plus the band hashes
+    b0..b{bands-1} of its ``_minhash_cols`` signature: each band's
+    signature values joined by '|', the signature columns dropped.
+    Defaults reproduce the registered 12-hash / 2-band layout; the
+    parameters exist for ``curate_incremental``'s pass-through banding.
+
+    Validation mirrors neardup_dedup's (r12 ADVICE): a non-divisible
+    (num_hashes, bands) pair would silently drop the trailing hash rows
+    from every band, so standalone gate callers (gate_static_index,
+    dedup_incremental_gate) mis-band without an error — raise instead."""
+    if num_hashes < 1 or bands < 1:
+        raise ValueError(
+            f"_gate_sig_cols: need num_hashes >= 1 and bands >= 1, got ({num_hashes}, {bands})"
+        )
+    if num_hashes % bands != 0:
+        raise ValueError(
+            f"_gate_sig_cols: bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
+    band_rows = num_hashes // bands
+    out = _minhash_cols(df, num_hashes)
     for b in range(bands):
         out = out.withColumn(
             f"b{b}",
@@ -3004,7 +2948,7 @@ def _gate_sig_cols(
                 ],
             ),
         )
-    return out.drop("hmarr", *[f"h{i}" for i in range(num_hashes)])
+    return out.drop(*[f"h{i}" for i in range(num_hashes)])
 
 
 def gate_static_index(
@@ -3030,12 +2974,7 @@ def gate_static_index(
     d = corpus.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    base = (
-        d.select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr_k(shingle_k).alias("shingles"))
-    )
-    sig = _gate_sig_cols(base, num_hashes=num_hashes, bands=bands)
+    sig = _gate_sig_cols(_shingle_sets(d, shingle_k), num_hashes=num_hashes, bands=bands)
     for b in range(bands):
         sig = sig.withColumn(
             f"n{b}", F.count(F.lit(1)).over(Window.partitionBy(f"b{b}"))
@@ -3210,20 +3149,14 @@ def dedup_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash); materialize it here exactly as the streaming runner does —
     # without this the two band joins re-plan the corpus scan + sig +
     # window-cap subtree per side (4 corpus scans, 0 ReusedExchange in
-    # the r12 PLANS dump). Same-session A/B at sf0.1, min-of-6: 1.541 s
+    # the r12 plan). Same-session A/B at sf0.1, min-of-6: 1.541 s
     # recomputed vs 1.491 s materialized — small here because the toy
     # corpus recomputes cheaply; at scale the subtree IS the corpus pass.
     # eager=False (r12 ADVICE): localCheckpoint persists partitions on
     # first computation either way, so both band joins still read the
     # written-once index in any timed run, but plan-only consumers
-    # (explain / PLANS dumps / registry sweeps) no longer trigger a
+    # (explain / plan dumps / registry sweeps) no longer trigger a
     # real Spark job per invocation. The streaming runner keeps
     # eager=True — its static side must exist before the stream starts.
     index = gate_static_index(d.filter(~is_batch)).localCheckpoint(eager=False)
-    batch = (
-        d.filter(is_batch)
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr().alias("shingles"))
-    )
-    return gate_score(_gate_sig_cols(batch), index)
+    return gate_score(_gate_sig_cols(_shingle_sets(d.filter(is_batch))), index)

@@ -438,8 +438,7 @@ def run_incremental_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark_for_ebook_classification_spark.operators.dedup import (
         _gate_sig_cols,
-        _raw_tokens_expr,
-        _shingles_expr,
+        _shingle_sets,
         gate_score,
         gate_static_index,
     )
@@ -452,13 +451,7 @@ def run_incremental_gate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batch joins a settled frame instead of replanning the
     # corpus-side window cap per trigger
     index = index.localCheckpoint(eager=True)
-    stream = (
-        documents_stream(spark, sf_dir)
-        .filter(SF.col("doc_id") % 4 == 0)
-        .select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(SF.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr().alias("shingles"))
-    )
+    stream = _shingle_sets(documents_stream(spark, sf_dir).filter(SF.col("doc_id") % 4 == 0))
     return _run_to_memory(gate_score(_gate_sig_cols(stream), index))
 
 

@@ -231,6 +231,64 @@ def test_nb_classify_is_fit_then_score(spark):
     assert _rows(nb_classify(renamed, req, **cols)) == _rows(nb_score(model, req, **cols))
 
 
+def test_nb_grouped_fit_and_score_equal_per_group_calls(spark):
+    """nb_fit/nb_score keyed by a group column return, row for row, the
+    union over groups of the ungrouped calls on each group's rows: at a
+    float alpha, and at a Column alpha that is itself a group key (the
+    CV twin's alpha grid). Groups share doc ids, so a leak across
+    groups would show. A numeric alpha <= 0 still raises."""
+    from pyspark.sql import functions as F
+
+    from pyspark_for_ebook_classification_spark.ml.queries import NBModel, nb_fit, nb_score
+
+    per_group = {
+        "g1": _NB_TRAIN,
+        "g2": [
+            (1, "spam", "cheap cheap pills"),
+            (2, "ham", "pills meeting agenda"),
+            (3, "ham", "project notes"),
+            (5, "eggs", "buy now buy"),
+        ],
+    }
+    train = spark.createDataFrame(
+        [(g, *r) for g, rows in per_group.items() for r in rows],
+        "g string, doc_id int, lang string, text string",
+    )
+    test = spark.createDataFrame(
+        [(g, *r) for g in per_group for r in _NB_TEST + [(13, "buy cheap agenda now")]],
+        "g string, doc_id int, text string",
+    )
+    model = nb_fit(train, group_cols=("g",))
+
+    def ungrouped(g, alpha):
+        rows = nb_score(
+            nb_fit(train.filter(F.col("g") == g)), test.filter(F.col("g") == g), alpha=alpha
+        ).collect()
+        return [(g, *r) for r in rows]
+
+    want = sorted(r for g in per_group for r in ungrouped(g, 0.5))
+    got = _rows(nb_score(model, test, alpha=0.5, group_cols=("g",)))
+    assert got == want and {r[0] for r in got} == set(per_group)
+
+    alphas = spark.createDataFrame([(0.5,), (2.0,)], "alpha double")
+    got = _rows(
+        nb_score(
+            NBModel(model.table.crossJoin(alphas)),
+            test.crossJoin(alphas),
+            alpha=F.col("alpha"),
+            group_cols=("g", "alpha"),
+        )
+    )
+    want = sorted(
+        (g, a, *r[1:]) for g in per_group for a in (0.5, 2.0) for r in ungrouped(g, a)
+    )
+    assert got == want
+
+    for bad in (0.0, -1.0):
+        with pytest.raises(ValueError, match="alpha > 0"):
+            nb_score(model, test, alpha=bad, group_cols=("g",))
+
+
 def test_nb_classify_reuses_model_of_persisted_train(spark, count_jobs):
     """A persisted train is fitted once: a second request with new test
     rows starts fewer Spark jobs than the first and returns the rows an

@@ -178,40 +178,34 @@ def test_bpe_library_train_extends_registered_trajectory(spark, sf_dir):
 # ----------------------- generalized gate helpers at non-default banding
 
 
-def test_gate_sig_cols_matches_explode_form_at_3_bands(spark, sf_dir):
-    """The r12 generalization of the projection-only MinHash must stay
-    bit-identical to the explode+groupBy form at a banding the defaults
+def test_gate_sig_cols_matches_oracle_at_3_bands(spark, sf_dir, duck):
+    """The r12 generalization of the projection-only MinHash must give
+    the DuckDB signature chain's band strings at a banding the defaults
     never exercise (12 hashes / 3 bands of 4 rows)."""
     from pyspark.sql import functions as F
 
     from pyspark_for_ebook_classification_spark.operators.dedup import (
-        _bands,
         _gate_sig_cols,
-        _minhash_signature,
-        _raw_tokens_expr,
-        _shingles_expr_k,
+        _shingle_sets,
+        _sql_sig_chain,
     )
     from pyspark_for_ebook_classification_spark.sources.io import load
 
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    proj = _gate_sig_cols(
-        d.select("doc_id", _raw_tokens_expr().alias("tokens"))
-        .filter(F.size("tokens") >= 1)
-        .select("doc_id", _shingles_expr_k(3).alias("shingles")),
-        num_hashes=12,
-        bands=3,
-    )
+    proj = _gate_sig_cols(_shingle_sets(d), num_hashes=12, bands=3)
     got = {
         (r.doc_id, b): r[f"b{b}"]
         for r in proj.collect()
         for b in range(3)
     }
-    want = {
-        (r.doc_id, r.band_id): r.band_hash
-        for r in _bands(
-            _minhash_signature(d.select("doc_id", "text")), n_bands=3, band_rows=4
-        ).collect()
-    }
+    bands = ", ".join(
+        " || '|' || ".join(f"CAST(h{4 * b + r} AS VARCHAR)" for r in range(4)) + f" AS b{b}"
+        for b in range(3)
+    )
+    rows = duck.sql(
+        f"WITH {_sql_sig_chain(doc_filter='doc_id % 7 = 0')} SELECT doc_id, {bands} FROM sig"
+    ).fetchall()
+    want = {(r[0], b): r[1 + b] for r in rows for b in range(3)}
     assert got == want and len(want) > 0
 
 

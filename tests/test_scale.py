@@ -200,15 +200,15 @@ def test_incremental_neardup_band_index_at_rest(spark, sf_dir, tmp_path):
     the query's own path. Also reconciles candidates: the at-rest join
     (uncapped) covers every cross pair the capped generator emits."""
     from pyspark_for_ebook_classification_spark.operators.dedup import (
-        _bands,
+        _band_rows,
         _lsh_candidate_pairs,
-        _minhash_signature,
+        _shingle_sig,
     )
 
     d = load(spark, sf_dir, "documents")
-    corpus_bands = _bands(_minhash_signature(d.filter(F.col("doc_id") % 4 != 0)))
+    corpus_bands = _band_rows(_shingle_sig(d.filter(F.col("doc_id") % 4 != 0)))
     batch_bands = (
-        _bands(_minhash_signature(d.filter(F.col("doc_id") % 4 == 0)))
+        _band_rows(_shingle_sig(d.filter(F.col("doc_id") % 4 == 0)))
         .withColumnRenamed("doc_id", "new_id")
     )
 
@@ -243,7 +243,7 @@ def test_incremental_neardup_band_index_at_rest(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS band_index")
         spark.sql("DROP TABLE IF EXISTS band_flat")
 
-    all_pairs = _lsh_candidate_pairs(_bands(_minhash_signature(d)))
+    all_pairs = _lsh_candidate_pairs(_band_rows(_shingle_sig(d)))
     want = set()
     for r in all_pairs.collect():
         a, b = r["doc_a"], r["doc_b"]
